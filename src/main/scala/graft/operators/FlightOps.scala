@@ -132,23 +132,52 @@ object FlightOps {
       events: DataFrame,
       timeCol: Column,
       windowDuration: String,
-      keys: Seq[(String, Column)],
-      delayFlag: Column = col("is_delayed"),
-      delayMinutes: Column = col("delay_minutes")): DataFrame = {
-    val keyCols = keys.map { case (n, c) => c.as(n) }
-    events
-      .groupBy((window(timeCol, windowDuration) +: keyCols): _*)
-      .agg(
-        count(lit(1)).as("total_flights"),
-        sum(delayFlag).cast("long").as("delayed_flights"),
-        avg(delayMinutes).as("avg_delay_minutes")
-      )
-      .select(
-        (col("window.start").as("window_start") +: col("window.end").as("window_end") +:
-          keys.map { case (n, _) => col(n) } :+
-          col("total_flights") :+ col("delayed_flights") :+ col("avg_delay_minutes")): _*
-      )
+      keys: Seq[(String, Column)]): DataFrame =
+    statsColumns(
+      events
+        .groupBy((window(timeCol, windowDuration) +: keys.map { case (n, c) => c.as(n) }): _*)
+        .agg(statsAggs.head, statsAggs.tail: _*),
+      keys.map(_._1))
+
+  /** The aggregates of every stats branch, over one (window, keys) group. */
+  private[graft] val statsAggs: Seq[Column] = Seq(
+    count(lit(1)).as("total_flights"),
+    sum(col("is_delayed")).cast("long").as("delayed_flights"),
+    avg(col("delay_minutes")).as("avg_delay_minutes"))
+
+  /** Flatten grouped `window` + `keyNames` + [[statsAggs]] rows into the
+    * columns [[windowedStats]] returns. */
+  private[graft] def statsColumns(grouped: DataFrame, keyNames: Seq[String]): DataFrame =
+    grouped.select(
+      (col("window.start").as("window_start") +: col("window.end").as("window_end") +:
+        keyNames.map(col) :+
+        col("total_flights") :+ col("delayed_flights") :+ col("avg_delay_minutes")): _*)
+
+  /** One keyed stats aggregate of the reference: its grouping keys, and
+    * `finish`, which turns [[windowedStats]] columns into the branch's own. */
+  final case class StatsShape(keys: Seq[(String, Column)], finish: DataFrame => DataFrame) {
+    def of(events: DataFrame, timeCol: Column, windowDuration: String): DataFrame =
+      finish(windowedStats(events, timeCol, windowDuration, keys))
   }
+
+  /** A1 — per airline, with the delay rate (FlightEventAggregator.java:219-248). */
+  val AirlineShape: StatsShape = StatsShape(Seq("airline" -> col("airline")),
+    _.withColumn("delay_rate",
+      col("delayed_flights").cast("double") / col("total_flights") * 100.0))
+
+  /** A2 — per route: origin, destination and the composed route key
+    * (FlightEventAggregator.java:250-279; no delayed count, no rate). */
+  val RouteShape: StatsShape = StatsShape(
+    Seq(
+      "route" -> concat_ws("-", col("origin"), col("destination")),
+      "origin" -> col("origin"),
+      "destination" -> col("destination")),
+    _.drop("delayed_flights"))
+
+  /** A3 — per hour of day; the hour is derived from the *event* field even
+    * though reference windows are processing-time (FlightEventAggregator.java:137). */
+  val HourlyShape: StatsShape =
+    StatsShape(Seq("hour_of_day" -> hour(col("scheduled_time"))), identity)
 
   /**
    * Reference-compat sink bounds (SURVEY §2 J1-J3, §7.4): the reference does
@@ -168,25 +197,15 @@ object FlightOps {
       .withColumn("window_end", current_timestamp())
       .withColumn("window_start", col("window_end") - expr(s"INTERVAL $windowDuration"))
 
-  /** A1 — per-airline delay stats incl. delay rate (FlightEventAggregator.java:219-248). */
+  /** [[AirlineShape]] over 2-minute windows by default. */
   def airlineStats(events: DataFrame, timeCol: Column, windowDuration: String = "2 minutes"): DataFrame =
-    windowedStats(events, timeCol, windowDuration, Seq("airline" -> col("airline")))
-      .withColumn("delay_rate",
-        col("delayed_flights").cast("double") / col("total_flights") * 100.0)
+    AirlineShape.of(events, timeCol, windowDuration)
 
-  /** A2 — per-route stats: origin, destination and the composed route key
-    * (FlightEventAggregator.java:250-279; no delayed count, no rate). */
+  /** [[RouteShape]] over 3-minute windows by default. */
   def routeStats(events: DataFrame, timeCol: Column, windowDuration: String = "3 minutes"): DataFrame =
-    windowedStats(events, timeCol, windowDuration,
-      Seq(
-        "route" -> concat_ws("-", col("origin"), col("destination")),
-        "origin" -> col("origin"),
-        "destination" -> col("destination")))
-      .drop("delayed_flights")
+    RouteShape.of(events, timeCol, windowDuration)
 
-  /** A3 — per-hour-of-day stats; the hour is derived from the *event* field
-    * even though reference windows are processing-time (FlightEventAggregator.java:137). */
+  /** [[HourlyShape]] over 5-minute windows by default. */
   def hourlyStats(events: DataFrame, timeCol: Column, windowDuration: String = "5 minutes"): DataFrame =
-    windowedStats(events, timeCol, windowDuration,
-      Seq("hour_of_day" -> hour(col("scheduled_time"))))
+    HourlyShape.of(events, timeCol, windowDuration)
 }

@@ -1,56 +1,57 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.jdbc.{JdbcDialect, JdbcDialects}
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /**
  * Sink abstraction. The reference writes to ClickHouse over JDBC with batch
  * size 1 (!) and to Kafka (FlightEventAggregator.java:94-110, KafkaUtils
- * .java:30-38). Structured Streaming has no native streaming JDBC writer, so
- * the idiomatic bridge is `foreachBatch` → batch `DataFrameWriter.jdbc` —
- * which also replaces the reference's row-at-a-time INSERT with whole-
- * micro-batch batched writes (orders of magnitude fewer round trips; the
- * "batch size 1" anti-optimization is deliberately not reproduced).
+ * .java:30-38). Every sink here is a batch write of one micro-batch, keyed
+ * by the streaming epoch id, so one `foreachBatch` can fan a batch out to
+ * several sinks. Structured Streaming has no native streaming JDBC writer, so
+ * the bridge is `foreachBatch` → batch `DataFrameWriter.jdbc`, which also
+ * replaces the reference's row-at-a-time INSERT with whole-micro-batch
+ * batched writes (the "batch size 1" anti-optimization is deliberately not
+ * reproduced).
  */
 sealed trait EventSink {
-  /** Attach this sink to a streaming frame and start the query. */
-  def start(df: DataFrame, checkpoint: String, queryName: String): StreamingQuery
-}
+  /** Write one micro-batch; `epochId` is its streaming batch id. */
+  def write(batch: DataFrame, epochId: Long): Unit
 
-object EventSink {
-
-  private def base(df: DataFrame, checkpoint: String, queryName: String): DataStreamWriter[Row] =
+  /** Attach this sink alone to a streaming frame and start the query. */
+  def start(df: DataFrame, checkpoint: String, queryName: String): StreamingQuery =
     df.writeStream
       .queryName(queryName)
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime("0 seconds"))
+      .foreachBatch(write _)
+      .start()
+}
+
+object EventSink {
 
   /** Kafka topic sink (expects a `value` string column). Needs the
     * spark-sql-kafka connector (production only; absent in this container —
     * the option map is pinned by `KafkaContractSpec` against the reference's
     * producer contract, KafkaUtils.java:30-38). */
   final case class Kafka(bootstrapServers: String, topic: String) extends EventSink {
-    /** Exact `writeStream.format("kafka")` option map (value-only string
+    /** Exact `format("kafka")` writer option map (value-only string
       * serialization is Spark's default for a single `value` column). */
     def writerOptions: Map[String, String] = Map(
       "kafka.bootstrap.servers" -> bootstrapServers,
       "topic" -> topic)
-    def start(df: DataFrame, checkpoint: String, queryName: String): StreamingQuery =
-      base(df, checkpoint, queryName)
-        .format("kafka")
-        .options(writerOptions)
-        .start()
+    def write(batch: DataFrame, epochId: Long): Unit =
+      batch.write.format("kafka").options(writerOptions).save()
   }
 
-  /** JDBC append sink via foreachBatch (ClickHouse, Derby, Postgres, ...). */
+  /** JDBC append sink (ClickHouse, Derby, Postgres, ...). */
   final case class Jdbc(url: String, table: String,
       properties: java.util.Properties = new java.util.Properties()) extends EventSink {
-    def start(df: DataFrame, checkpoint: String, queryName: String): StreamingQuery =
-      base(df, checkpoint, queryName).foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode(SaveMode.Append).jdbc(url, table, properties)
-      }.start()
+    def write(batch: DataFrame, epochId: Long): Unit =
+      batch.write.mode(SaveMode.Append).jdbc(url, table, properties)
   }
 
   /**
@@ -68,6 +69,8 @@ object EventSink {
    */
   final case class JdbcIdempotent(url: String, table: String,
       properties: java.util.Properties = new java.util.Properties()) extends EventSink {
+
+    def write(batch: DataFrame, epochId: Long): Unit = writeEpoch(batch, epochId)
 
     /** The foreachBatch body, exposed so tests can replay an epoch. The two
       * halves are individually exposed ([[deleteEpoch]] / [[appendEpoch]]) so
@@ -107,27 +110,32 @@ object EventSink {
     def appendEpoch(batch: DataFrame, epochId: Long): Unit =
       batch.withColumn("batch_id", org.apache.spark.sql.functions.lit(epochId))
         .write.mode(SaveMode.Append).jdbc(url, table, properties)
-
-    def start(df: DataFrame, checkpoint: String, queryName: String): StreamingQuery =
-      base(df, checkpoint, queryName).foreachBatch(writeEpoch _).start()
   }
 
-  /** Parquet append sink (the offline stand-in for the raw-persist branch). */
+  /** Parquet sink (the offline stand-in for the raw-persist branch). Each
+    * epoch overwrites its own `batch_id=<epoch>` directory under `path`, so a
+    * replayed epoch still leaves one copy and `spark.read.parquet(path)`
+    * reads every epoch back with `batch_id` as a partition column. */
   final case class Parquet(path: String) extends EventSink {
-    def start(df: DataFrame, checkpoint: String, queryName: String): StreamingQuery =
-      base(df, checkpoint, queryName)
-        .format("parquet")
-        .option("path", path)
-        .start()
+    def write(batch: DataFrame, epochId: Long): Unit =
+      batch.write.mode(SaveMode.Overwrite).parquet(s"$path/batch_id=$epochId")
   }
 
-  /** In-memory table sink (tests / debugging). */
-  final case class Memory(outputMode: String = "append") extends EventSink {
-    def start(df: DataFrame, checkpoint: String, queryName: String): StreamingQuery =
-      base(df, checkpoint, queryName)
-        .format("memory")
-        .outputMode(outputMode)
-        .start()
+  /** In-memory sink (tests / debugging): keeps each epoch's rows on the
+    * driver, ignores a replayed epoch, and serves all rows kept so far as the
+    * temp view `table`. The view is registered in the default session, since
+    * a streaming query hands `foreachBatch` frames of a clone of it. */
+  final case class Memory(table: String) extends EventSink {
+    private val epochs = mutable.LinkedHashMap.empty[Long, Seq[Row]]
+
+    def write(batch: DataFrame, epochId: Long): Unit = epochs.synchronized {
+      if (!epochs.contains(epochId)) {
+        epochs(epochId) = batch.collect().toSeq
+        val spark = SparkSession.getDefaultSession.getOrElse(batch.sparkSession)
+        spark.createDataFrame(epochs.values.flatten.toSeq.asJava, batch.schema)
+          .createOrReplaceTempView(table)
+      }
+    }
   }
 }
 

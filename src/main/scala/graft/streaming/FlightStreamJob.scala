@@ -1,8 +1,10 @@
 package graft.streaming
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.Row
 import graft.operators.FlightOps
 import graft.sources.EventSource
 import graft.sinks.EventSink
@@ -17,11 +19,28 @@ import graft.sinks.EventSink
  *   4. per-hour-of-day 5-min windowed stats    (keyed window agg → sink)
  *   5. raw parsed events                       (passthrough persist)
  *
- * Architectural decision (SURVEY §7.3): five independent StreamingQuerys, one
- * per sink — each with its own checkpoint and its own windowed state, exactly
- * mirroring the per-branch accumulator state of the reference. The
- * read-amplification (each query reads the source) is a non-goal at test
- * scale; a single-query `foreachBatch` fan-out variant is the 100 TB design.
+ * Architectural decision (SURVEY §7.3): two StreamingQuerys, each reading and
+ * parsing every event once and fanning its micro-batch out to its sinks in
+ * `foreachBatch`:
+ *
+ *   - `events` (stateless): persists each parsed batch, then writes it to
+ *     the raw-events sink and its delayed flights to the notifications sink.
+ *   - `stats` (stateful): one row per event and stats branch, tagged with the
+ *     branch and carrying that branch's window and keys, into ONE append-mode
+ *     aggregation grouped by (tag, window, keys) with one state store. Each
+ *     output batch is persisted and split by tag into the three stats sinks.
+ *
+ * Per-trigger work (source listing, planning, codegen, checkpoint commits)
+ * is paid twice per trigger instead of five times, and the three windowed
+ * branches share one shuffle and one state store. The exploded window column
+ * carries the event-time column's watermark metadata, as Spark's `window()`
+ * does, so a window is emitted, and a late row dropped, by the same
+ * `window.end <= watermark` rule as a per-branch query: every stats sink gets
+ * exactly the closed-window rows of [[FlightOps.airlineStats]],
+ * [[FlightOps.routeStats]] and [[FlightOps.hourlyStats]]. A failing sink
+ * stops its whole query, as one failing operator stops the reference's
+ * single Flink job. Checkpoints live in `<checkpointRoot>/events` and
+ * `<checkpointRoot>/stats`.
  *
  * Time semantics (SURVEY §7.4): the reference windows on *processing* time
  * (`TumblingProcessingTimeWindows`, no watermarks). `TimeMode.Processing`
@@ -40,12 +59,24 @@ object FlightStreamJob {
     final case class Event(timeCol: String, watermark: String = "0 seconds") extends TimeMode
   }
 
+  /** The query serving each branch: notifications and raw events share the
+    * `events` query, the three stats branches the `stats` query. */
   final case class Branches(
       notifications: StreamingQuery,
       airlineStats: StreamingQuery,
       routeStats: StreamingQuery,
       hourlyStats: StreamingQuery,
-      rawEvents: StreamingQuery)
+      rawEvents: StreamingQuery) {
+    /** The distinct queries behind the five branches. */
+    def queries: Seq[StreamingQuery] =
+      Seq(notifications, airlineStats, routeStats, hourlyStats, rawEvents).distinct
+  }
+
+  /** The three stats branches: sink name, tumbling window and shape. */
+  private val StatsBranches = Seq(
+    ("airline_stats", "2 minutes", FlightOps.AirlineShape),
+    ("route_stats", "3 minutes", FlightOps.RouteShape),
+    ("hourly_stats", "5 minutes", FlightOps.HourlyShape))
 
   /** Parse the raw source and stamp the window time column per mode. */
   def parsedStream(spark: SparkSession, source: EventSource, mode: TimeMode): (DataFrame, Column) = {
@@ -60,60 +91,42 @@ object FlightStreamJob {
   }
 
   /**
-   * The 100 TB variant (SURVEY §7.3 option b): ONE StreamingQuery whose
-   * foreachBatch persists each parsed micro-batch and fans out to all five
-   * destinations — the source is read once per trigger regardless of branch
-   * count, which is the property that matters when the source is 100 TB of
-   * Kafka backlog.
-   *
-   * Semantics difference vs [[start]] (documented, inherent to the shape):
-   * the three stats branches emit *per-batch partial* window aggregates —
-   * each trigger appends that batch's contribution to every window it
-   * touches. Downstream stores merge partials (sum counts, sum delay
-   * totals), which is why `avg` is decomposed into `delay_minutes_total` —
-   * averages of averages don't merge, sums do. This mirrors how the
-   * reference's ClickHouse tables would be declared as SummingMergeTree.
+   * The `stats` query's aggregation: each event becomes one row per stats
+   * branch with columns `tag` (the branch's sink name), `window` (its
+   * tumbling window on `timeCol`) and the union of all branches' keys (null
+   * where a branch has no such key), grouped by all of them with
+   * [[FlightOps.statsAggs]]. Rows of one tag are exactly that branch's
+   * groups, since the tag is part of the grouping.
    */
-  def startFused(
-      spark: SparkSession,
-      source: EventSource,
-      timeCol: Column,
-      checkpoint: String,
-      writeBranch: (String, DataFrame) => Unit): StreamingQuery = {
-    val parsed = FlightOps.parseFlightEvents(source.load(spark))
-    parsed.writeStream
-      .queryName("flight_fused")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.persist()
-        try {
-          writeBranch("raw_events", batch)
-          writeBranch("notifications", FlightOps.delayNotifications(batch))
-          def partial(keys: Seq[(String, Column)], dur: String) =
-            batch.groupBy((window(timeCol, dur) +: keys.map { case (n, c) => c.as(n) }): _*)
-              .agg(count(lit(1)).as("total_flights"),
-                sum(col("is_delayed")).cast("long").as("delayed_flights"),
-                sum(col("delay_minutes")).as("delay_minutes_total"))
-              .select((col("window.start").as("window_start") +:
-                col("window.end").as("window_end") +:
-                keys.map { case (n, _) => col(n) } :+ col("total_flights") :+
-                col("delayed_flights") :+ col("delay_minutes_total")): _*)
-          writeBranch("airline_stats",
-            partial(Seq("airline" -> col("airline")), "2 minutes"))
-          writeBranch("route_stats", partial(Seq(
-            "route" -> concat_ws("-", col("origin"), col("destination")),
-            "origin" -> col("origin"), "destination" -> col("destination")), "3 minutes"))
-          writeBranch("hourly_stats",
-            partial(Seq("hour_of_day" -> hour(col("scheduled_time"))), "5 minutes"))
-        } finally batch.unpersist()
-        ()
-      }
-      .start()
+  private def statsAggregate(parsed: DataFrame, timeCol: Column): DataFrame = {
+    val keys = StatsBranches.flatMap(_._3.keys).distinctBy(_._1)
+    val keyFields = parsed.select(keys.map { case (n, c) => c.as(n) }: _*).schema.fields.toSeq
+    // window() copies the time column's watermark metadata onto its output;
+    // the exploded window column must carry it too, or the aggregation has
+    // no event-time key to emit and evict by
+    val watermarked = parsed.select(timeCol).schema.head.metadata
+    val withWindows = StatsBranches.foldLeft(parsed) { case (df, (name, dur, _)) =>
+      df.withColumn(s"window_$name", window(timeCol, dur))
+    }
+    val rows = array(StatsBranches.map { case (name, _, shape) =>
+      val own = shape.keys.toMap
+      struct((lit(name).as("tag") +: col(s"window_$name").as("window") +: keyFields.map { f =>
+        own.getOrElse(f.name, lit(null).cast(f.dataType)).as(f.name)
+      }): _*)
+    }: _*)
+    val grouping = col("tag") +: col("window") +: keyFields.map(f => col(f.name))
+    withWindows
+      .select(explode(rows).as("r"), col("is_delayed"), col("delay_minutes"))
+      .select((col("r.tag").as("tag") +: col("r.window").as("window", watermarked) +:
+        keyFields.map(f => col(s"r.${f.name}").as(f.name)) :+
+        col("is_delayed") :+ col("delay_minutes")): _*)
+      .groupBy(grouping: _*)
+      .agg(FlightOps.statsAggs.head, FlightOps.statsAggs.tail: _*)
   }
 
   /**
-   * Wire and start all five branches. `sinkFor` maps branch name →
-   * sink ("notifications", "airline_stats", "route_stats", "hourly_stats",
+   * Wire and start the job. `sinkFor` maps branch name → sink
+   * ("notifications", "airline_stats", "route_stats", "hourly_stats",
    * "raw_events"), so tests plug Memory sinks where production plugs
    * Kafka/JDBC.
    */
@@ -125,26 +138,50 @@ object FlightStreamJob {
       sinkFor: String => EventSink,
       compatBounds: Boolean = false): Branches = {
     val (parsed, timeCol) = parsedStream(spark, source, mode)
+    val raw = sinkFor("raw_events")
+    val notifications = sinkFor("notifications")
+    val stats = StatsBranches.map { case (name, dur, shape) => (name, sinkFor(name), dur, shape) }
 
-    def cp(name: String) = s"$checkpointRoot/$name"
+    def writer(df: DataFrame, name: String): DataStreamWriter[Row] =
+      df.writeStream
+        .queryName(name)
+        .option("checkpointLocation", s"$checkpointRoot/$name")
+        .trigger(Trigger.ProcessingTime("0 seconds"))
+
+    val eventsQuery = writer(parsed, "events")
+      .foreachBatch { (batch: DataFrame, epoch: Long) =>
+        batch.persist()
+        try {
+          raw.write(batch, epoch)
+          notifications.write(FlightOps.delayNotifications(batch), epoch)
+        } finally batch.unpersist()
+      }
+      .start()
+
     // compatBounds reproduces the reference's now()-derived sink bounds
     // (FlightOps.compatSinkBounds); default = true window bounds.
-    def bounds(stats: DataFrame, dur: String) =
-      if (compatBounds) FlightOps.compatSinkBounds(stats, dur) else stats
+    val statsQuery =
+      try writer(statsAggregate(parsed, timeCol), "stats")
+        .outputMode("append")
+        .foreachBatch { (batch: DataFrame, epoch: Long) =>
+          batch.persist()
+          try stats.foreach { case (name, sink, dur, shape) =>
+            val rows = shape.finish(FlightOps.statsColumns(
+              batch.filter(col("tag") === name), shape.keys.map(_._1)))
+            sink.write(if (compatBounds) FlightOps.compatSinkBounds(rows, dur) else rows, epoch)
+          } finally batch.unpersist()
+        }
+        .start()
+      catch {
+        // a job that cannot start whole must not leave half of it running
+        case NonFatal(e) => eventsQuery.stop(); throw e
+      }
 
     Branches(
-      notifications = sinkFor("notifications").start(
-        FlightOps.delayNotifications(parsed), cp("notifications"), "notifications"),
-      airlineStats = sinkFor("airline_stats").start(
-        bounds(FlightOps.airlineStats(parsed, timeCol, "2 minutes"), "2 minutes"),
-        cp("airline_stats"), "airline_stats"),
-      routeStats = sinkFor("route_stats").start(
-        bounds(FlightOps.routeStats(parsed, timeCol, "3 minutes"), "3 minutes"),
-        cp("route_stats"), "route_stats"),
-      hourlyStats = sinkFor("hourly_stats").start(
-        bounds(FlightOps.hourlyStats(parsed, timeCol, "5 minutes"), "5 minutes"),
-        cp("hourly_stats"), "hourly_stats"),
-      rawEvents = sinkFor("raw_events").start(
-        parsed, cp("raw_events"), "raw_events"))
+      notifications = eventsQuery,
+      airlineStats = statsQuery,
+      routeStats = statsQuery,
+      hourlyStats = statsQuery,
+      rawEvents = eventsQuery)
   }
 }

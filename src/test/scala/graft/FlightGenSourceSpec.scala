@@ -28,27 +28,37 @@ class FlightGenSourceSpec extends SparkSpec {
   }
 
   test("five-branch topology runs end-to-end from the DSv2 source") {
+    // row i is scheduled at 00:00 + 30 i s, in order, so with a zero watermark
+    // delay row 600 (05:00) closes every window rows 0..599 opened
     val cp = Files.createTempDirectory("fg-job-cp").toString
     val branches = graft.streaming.FlightStreamJob.start(
       spark,
-      graft.sources.EventSource.FlightGen(numRows = 600, rowsPerBatch = 200),
+      graft.sources.EventSource.FlightGen(numRows = 601, rowsPerBatch = 200),
       graft.streaming.FlightStreamJob.TimeMode.Event("scheduled_time"),
       cp,
-      name => graft.sinks.EventSink.Memory(
-        if (name == "notifications" || name == "raw_events") "append" else "update"))
+      name => graft.sinks.EventSink.Memory(s"fg_$name"))
     try {
-      Seq(branches.notifications, branches.airlineStats, branches.routeStats,
-        branches.hourlyStats, branches.rawEvents).foreach(_.processAllAvailable())
-      assert(spark.table("raw_events").count() == 600)
+      branches.queries.foreach(_.processAllAvailable())
+      assert(spark.table("fg_raw_events").count() == 601)
       // generator delays: (i % 90) - 30 > 0, i.e. i % 90 in 31..89
-      val expectedDelayed = (0L until 600L).count(i => i % 90 > 30) // = 383
-      assert(spark.table("notifications").count() == expectedDelayed)
-      assert(spark.table("airline_stats").select("airline").distinct().count() == 8)
-      assert(spark.table("hourly_stats").count() > 0)
-      assert(spark.table("route_stats").count() > 0)
-    } finally
-      Seq(branches.notifications, branches.airlineStats, branches.routeStats,
-        branches.hourlyStats, branches.rawEvents).foreach(_.stop())
+      val expectedDelayed = (0L to 600L).count(i => i % 90 > 30) // = 384
+      assert(spark.table("fg_notifications").count() == expectedDelayed)
+
+      val events = FlightOps.parseFlightEvents(
+        spark.read.format("flight-gen").option("numRows", 601).load())
+      val tc = col("scheduled_time")
+      val closedBy = lit(java.sql.Timestamp.valueOf("2024-01-01 05:00:00"))
+      Seq(
+        "airline_stats" -> FlightOps.airlineStats(events, tc, "2 minutes"),
+        "route_stats" -> FlightOps.routeStats(events, tc, "3 minutes"),
+        "hourly_stats" -> FlightOps.hourlyStats(events, tc, "5 minutes")).foreach { case (b, all) =>
+        val expected = all.filter(col("window_end") <= closedBy)
+        val actual = spark.table(s"fg_$b").select(expected.columns.toIndexedSeq.map(col): _*)
+        assert(expected.count() > 0 && actual.count() == expected.count(), b)
+        assert(actual.exceptAll(expected).count() == 0, s"$b differs from its closed windows")
+      }
+      assert(spark.table("fg_airline_stats").select("airline").distinct().count() == 8)
+    } finally branches.queries.foreach(_.stop())
   }
 
   test("micro-batch stream: finite row-count offsets drain in rowsPerBatch steps") {
