@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every catalog query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. A warmup pass (tiny action + one full run of the
@@ -15,26 +14,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.enableJsonExpressionOptimization", "false")
-      .config("spark.graft.parallelizeSmallScans", "true")
-      // The k-means / PQ training updates aggregate k·dim (sum, count)
-      // pairs as WIDE columns (64-dim corpus → ~193 partial-agg buffer
-      // fields), which overflows the default
-      // spark.sql.codegen.maxFields=100 and silently drops the whole
-      // aggregation out of whole-stage codegen — measured 2× the exec CPU
-      // interpreted (EvalProfMain A/B, OPTIMIZATION_r18.md §7). The width
-      // is k·dim — a property of the MODEL shape, not the data scale — so
-      // raising the span cap is correct at any corpus size. Env-overridable
-      // for A/Bs.
-      .config("spark.sql.codegen.maxFields",
-        sys.env.getOrElse("GRAFT_CODEGEN_MAXFIELDS", "200"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val selected =
       if (args.isEmpty) SparkEntry.queries

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Interleaved spot bench — the verdict-r11 item-1 tracking tool,
  * generalized in r13 (verdict-r12 item 1b) to take an ARBITRARY row list.
@@ -35,19 +33,7 @@ object FlightSpotBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val rounds = math.max(3, sys.env.getOrElse("SPOT_ROUNDS", "7").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.enableJsonExpressionOptimization", "false")
-      .config("spark.graft.parallelizeSmallScans", "true")
-      // match Bench's codegen span cap (see Bench.scala) so profiles
-      // measure the shipped shape; env-overridable for A/Bs
-      .config("spark.sql.codegen.maxFields",
-        sys.env.getOrElse("GRAFT_CODEGEN_MAXFIELDS", "200"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val defaultFam = Seq("flight_parse", "flight_delayed", "flight_notifications",
       "flight_reject_stats", "flight_airline_stats", "flight_route_stats",

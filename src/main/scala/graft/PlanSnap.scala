@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev tool: snapshot `.explain("formatted")` for named catalog queries into
@@ -13,17 +12,7 @@ object PlanSnap {
     val names = args.tail
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.enableJsonExpressionOptimization", "false")
-      .config("spark.graft.parallelizeSmallScans", "true")
-      // match Bench's codegen span cap (see Bench.scala) so committed
-      // plans show the shipped WholeStageCodegen spans
-      .config("spark.sql.codegen.maxFields",
-        sys.env.getOrElse("GRAFT_CODEGEN_MAXFIELDS", "200"))
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val outDir = java.nio.file.Paths.get("plans/r18")
     java.nio.file.Files.createDirectories(outDir)

@@ -79,8 +79,8 @@ object Queries {
           when(col("value") > 75, lit("Delayed")).otherwise(lit("ON_TIME"))).as("status"),
         concat(lit("u"), col("user_id").cast("string")).as("userId")
       )).as("value"))
-    // Local-fixture fan-out of the wire frame (the Tables.fanOutSmallScan
-    // discipline, same opt-in flag): the single-row-group test parquet
+    // Local-fixture fan-out of the wire frame (the Tables.smallScanTarget
+    // policy, same opt-in flag): the single-row-group test parquet
     // otherwise serializes the whole encode→parse chain onto ONE task
     // (measured par≈0.9× on every flight row at sf0.1). The r16 measurement
     // that rejected a bare exchange here (1.91 s vs 1.21 s at sf0.1) traced
@@ -96,17 +96,13 @@ object Queries {
     // conventions (the driver's hash gate re-proves it each run). On a real
     // cluster (partitioned Kafka topic / multi-split storage) the plan-time
     // split check never fires and the plan is byte-identical to before.
-    val spark = ev.sparkSession
-    val enabled = spark.conf.getOption("spark.graft.parallelizeSmallScans")
-      .contains("true")
-    lazy val target = spark.sparkContext.defaultParallelism
-    if (enabled && wire.rdd.getNumPartitions < math.max(2, target / 2))
+    Tables.smallScanTarget(wire).fold(wire) { target =>
       // spark_partition_id, not rand: Spark 4's rand-range simplification
       // folds `rand() > -1` to TRUE and deletes the barrier (measured: the
       // reject filters then pushed below the exchange and re-inlined the
       // parse 8×, 1.2 s → 2.15 s); partition ids have no such folding rule
       wire.repartition(target).filter(expr("spark_partition_id() >= 0"))
-    else wire
+    }
   }
 
   def parsedFlights(spark: SparkSession, dir: String): DataFrame =

@@ -510,7 +510,8 @@ object QueriesTextDedup {
     // artifact AND the signature index load from fixture parquet; in-query
     // work is batch signing, candidate generation against the loaded index,
     // exact verify, and admitComponents' contracted solve + one broadcast
-    // remap — the warm 0.27-0.62×-of-cold shape DebugWarm measured, now an
+    // remap — the warm 0.27-0.62×-of-cold shape recorded in BASELINE.md
+    // "Components: rounds-to-convergence and warm admission (r11)", now an
     // oracle-gated catalog row against the same from-scratch recursive CTE.
     ("dedup_components_served",
       (s: SparkSession, d: String) => {

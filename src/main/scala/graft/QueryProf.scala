@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import java.util.concurrent.atomic.{AtomicLong, LongAdder}
 
@@ -13,25 +12,7 @@ object QueryProf {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.enableJsonExpressionOptimization", "false")
-      .config("spark.graft.parallelizeSmallScans", "true")
-      // match Bench's codegen span cap (see Bench.scala) so profiles
-      // measure the shipped shape; env-overridable for A/Bs
-      .config("spark.sql.codegen.maxFields",
-        sys.env.getOrElse("GRAFT_CODEGEN_MAXFIELDS", "200"))
-      // A/B knobs for AQE coalescing experiments (dev-only; Bench owns the
-      // real settings)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("GRAFT_ADVISORY", "64MB"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val jobs = new AtomicLong; val stages = new AtomicLong
     val tasks = new LongAdder; val runMs = new LongAdder; val gcMs = new LongAdder

@@ -81,13 +81,7 @@ object ScaleStress {
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.enableJsonExpressionOptimization", "false")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder(cpus)
       .config("spark.sql.warehouse.dir", "/tmp/graft-scale-warehouse")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -124,11 +118,11 @@ object ScaleStress {
       } :+ {
         // The production incremental shape: the catalog's `dedup_incremental`
         // rebuilds the signature index in-query every run (at 10× that build
-        // is ~80 % of its wall time — see DebugPerf), but at real scale the
-        // index and the corpus shingle store are persisted, append-only
-        // artifacts. Build both OUTSIDE the timer, then time only the unit
-        // of incremental work: sign the new batch, find candidates against
-        // the bucketed index, verify, keep.
+        // is ~80 % of its wall time — BASELINE.md "Dedup scale-stress"), but
+        // at real scale the index and the corpus shingle store are
+        // persisted, append-only artifacts. Build both OUTSIDE the timer,
+        // then time only the unit of incremental work: sign the new batch,
+        // find candidates against the bucketed index, verify, keep.
         val docs = Tables.documents(spark, dir)
         val cut = docs.agg(floor(max(col("doc_id")) * 4 / 5).cast("long"))
           .head().getLong(0)

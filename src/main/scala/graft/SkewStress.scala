@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.TextOps
@@ -56,14 +56,10 @@ object SkewStress {
     // well below the hot key's ~15k occurrences, well above the salted long
     // tail — the injected key must classify as heavy
     val heavyCut = 1000L
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = GraftSession.builder(cpus)
       // cluster-granularity tasks; keep AQE from re-merging them
       .config("spark.sql.shuffle.partitions", "2048")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       // CRITICAL for the AQE skew-join block below, and a real 100 TB
       // deployment lesson: above spark.shuffle
       // .minNumPartitionsToHighlyCompress (2000) reducers, MapStatus

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import scala.collection.mutable.ArrayBuffer
 
@@ -15,19 +14,7 @@ object StageProf {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.enableJsonExpressionOptimization", "false")
-      .config("spark.graft.parallelizeSmallScans", "true")
-      // match Bench's codegen span cap (see Bench.scala) so profiles
-      // measure the shipped shape; env-overridable for A/Bs
-      .config("spark.sql.codegen.maxFields",
-        sys.env.getOrElse("GRAFT_CODEGEN_MAXFIELDS", "200"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     case class St(id: Int, name: String, tasks: Int, runMs: Long, gcMs: Long,
       inRec: Long, outRec: Long, shufR: Long, shufW: Long, details: String)

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sources.EventSource
 import graft.operators.FlightOps
@@ -22,13 +21,7 @@ object StreamBench {
     val seconds = sys.env.getOrElse("SPARK_GRAFT_STREAM_SECS", "30").toInt
     val rate = sys.env.getOrElse("SPARK_GRAFT_STREAM_RATE", "200000").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.enableJsonExpressionOptimization", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // SPARK_GRAFT_STREAM_SOURCE=flight-gen drives the DataSource V2

@@ -28,26 +28,33 @@ object Tables {
 
   /**
    * Fan a tiny single-split scan out to the session's parallelism, opt-in
-   * via `spark.graft.parallelizeSmallScans` (set by the Bench/Verify
-   * mains). The local test parquet has ONE row group, so the scan is one
-   * task and every heavy per-row projection above it (per-char winnowing
-   * hashes, MinHash signatures, gram explodes) runs single-threaded — a
-   * local-fixture artifact, not a property of the operators. On a real
-   * cluster the scan already has >= parallelism splits and this never
-   * fires (the split-count check is plan-time; no job runs), so the
-   * default-off audited plans are exactly the at-scale plans. Round-robin
+   * via `spark.graft.parallelizeSmallScans` (on in every [[GraftSession]];
+   * the test session leaves it off). The local test parquet has ONE row
+   * group, so the scan is one task and every heavy per-row projection above
+   * it (per-char winnowing hashes, MinHash signatures, gram explodes) runs
+   * single-threaded — a local-fixture artifact, not a property of the
+   * operators. On a real cluster the scan already has >= parallelism splits
+   * and this never fires (the split-count check is plan-time; no job runs),
+   * so the default-off audited plans are exactly the at-scale plans. Round-robin
    * repartition is deterministic (Spark sorts within input partitions
    * first) and every catalog result is partition-invariant by the decimal/
    * exact-int conventions, which the driver's hash gate re-proves each run.
    */
-  private def fanOutSmallScan(df: DataFrame): DataFrame = {
+  private def fanOutSmallScan(df: DataFrame): DataFrame =
+    smallScanTarget(df).fold(df)(df.repartition)
+
+  /** The small-scan fan-out policy, shared with the wire frame of
+    * `Queries.wireFlightJson`: `Some(parallelism)` when the opt-in flag is
+    * on and `df` has fewer than half as many partitions (at least 2) as
+    * the session's default parallelism, else `None`. */
+  private[graft] def smallScanTarget(df: DataFrame): Option[Int] = {
     val spark = df.sparkSession
     val enabled = spark.conf.getOption("spark.graft.parallelizeSmallScans")
       .contains("true")
     lazy val target = spark.sparkContext.defaultParallelism
     if (enabled && df.rdd.getNumPartitions < math.max(2, target / 2))
-      df.repartition(target)
-    else df
+      Some(target)
+    else None
   }
 
   /** events with `ts` normalized to a microsecond TIMESTAMP regardless of

@@ -24,15 +24,6 @@ object Multimodal {
   private def magicBe(s: String): Long =
     s.getBytes("US-ASCII").foldLeft(0L)((a, b) => (a << 8) | (b & 0xffL))
 
-  /** Canonical multimodal schema fragment: payload + metadata struct. */
-  def withMediaMetadata(df: DataFrame, binCol: Column, mediaType: String): DataFrame =
-    df.withColumn("media",
-      struct(
-        binCol.as("payload"),
-        lit(mediaType).as("media_type"),
-        length(binCol).as("n_bytes"),
-        md5(binCol).as("content_hash")))
-
   /**
    * The codec seam: binary payload → fixed-width double feature vector, as a
    * Column transform so every impl composes into whole-stage codegen'd
@@ -701,7 +692,7 @@ object Multimodal {
     * to per-frame [[gridMeans]] fingerprints, strict reject rules (a bad
     * container or ANY bad frame drops the whole video; frames must have
     * grid-divisible dims). Output: (video_id, frame_idx, channels, gvec). */
-  private[graft] def videoGridFrames(videos: DataFrame, vidId: Column,
+  private def videoGridFrames(videos: DataFrame, vidId: Column,
       vidBin: Column, grid: Int, meanScale: Long): DataFrame = {
     // byte_be header reads (r18): per-frame, inside the transform lambda —
     // see the videoNearDup note; bit-identical incl. truncated reads
@@ -743,7 +734,7 @@ object Multimodal {
 
   /** The image half: strict full-length grid-divisible GIMG to its
     * [[gridMeans]] fingerprint. Output: (image_id, channels, gvec). */
-  private[graft] def imageGridFingerprint(images: DataFrame, imgId: Column,
+  private def imageGridFingerprint(images: DataFrame, imgId: Column,
       imgBin: Column, grid: Int, meanScale: Long): DataFrame = {
     def beUint(b: Column, start: Column, len: Int): Column =
       conv(hex(b.substr(start, lit(len))), 16, 10).cast("long")

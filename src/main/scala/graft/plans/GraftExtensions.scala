@@ -17,9 +17,10 @@ import graft.functions.ArrayDotProduct
  * to built-in plans; see SURVEY §4 "custom work required").
  *
  * For a session built WITHOUT extensions (a host app that owns session
- * construction, or the Verify/Bench mains), [[GraftExtensions.registerAll]]
+ * construction, or any [[graft.GraftSession]]), [[GraftExtensions.registerAll]]
  * performs the same registrations at runtime through the session's
- * FunctionRegistry — idempotent, so calling it per-query is safe.
+ * FunctionRegistry — idempotent, so calling it per-query is safe (the SQL
+ * catalog rows do, in `QueriesSql.run`).
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =

@@ -74,11 +74,4 @@ object CorpusSource {
     * one frame (filter on `is_reject` to split). */
   def readJsonl(spark: SparkSession, path: String): DataFrame =
     parseJsonl(spark.read.text(path).select(col("value")))
-
-  /** Streaming read of a JSONL directory (same contract; files appear over
-    * time, `maxFilesPerTrigger` paces ingestion). */
-  def readJsonlStream(spark: SparkSession, path: String,
-      maxFilesPerTrigger: Int = 16): DataFrame =
-    parseJsonl(spark.readStream.option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .text(path).select(col("value")))
 }

@@ -447,6 +447,44 @@ class PlanAuditSpec extends SparkSpec {
         assert(plan.exists(_.isInstanceOf[WholeStageCodegenExec]),
           s"$name lost whole-stage codegen:\n$plan")
       }
+
+    // The Lloyd update of Similarity.kmeansCentroids: 64-dim vectors
+    // assigned by the static fold, then one aggregation of 64 decimal-routed
+    // means per cell (~193 partial-aggregate buffer fields). That is over
+    // Spark's default codegen.maxFields=100, so only GraftSession's 200
+    // keeps these HashAggregates inside a codegen span.
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.functions._
+    import graft.operators.Similarity
+    val v = Tables.embeddings(spark, sfDir)
+      .select(col("vec_id"), Similarity.asDouble(col("embedding")).as("ve"))
+    val cent = v.orderBy(col("vec_id")).limit(8).collect().zipWithIndex
+      .map { case (r, i) => (i, r.getSeq[Double](1)) }
+    val dim = cent.head._2.length
+    assert(dim == 64)
+    val means = (0 until dim).map { i =>
+      (sum(get(col("ve"), lit(i)).cast("decimal(30,15)")).cast("double") /
+        count(when(size(col("ve")) > i, lit(1)))).as(s"c$i")
+    }
+    val lloyd = Similarity.assignCellsStatic(v, cent, "vec_id", "ve")
+      .groupBy(col("cell_id")).agg(means.head, means.tail: _*)
+    assert(lloyd.collect().length == 8)
+    // (is this HashAggregate inside a codegen span?) for every one in the
+    // final adaptive plan
+    def aggs(p: SparkPlan, inSpan: Boolean): Seq[Boolean] = p match {
+      case a: AdaptiveSparkPlanExec => aggs(a.executedPlan, false)
+      case q: QueryStageExec => aggs(q.plan, false)
+      case w: WholeStageCodegenExec => aggs(w.child, true)
+      case i: InputAdapter => aggs(i.child, false)
+      case h: HashAggregateExec => inSpan +: h.children.flatMap(aggs(_, inSpan))
+      case o => o.children.flatMap(aggs(_, inSpan))
+    }
+    val plan = lloyd.queryExecution.executedPlan
+    val inSpan = aggs(plan, false)
+    assert(inSpan.nonEmpty && inSpan.forall(identity),
+      s"the Lloyd update fell out of whole-stage codegen:\n$plan")
   }
 
   test("filters reach the parquet scan (pushdown) on the canonical scan query") {

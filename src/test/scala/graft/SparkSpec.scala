@@ -3,17 +3,20 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session for all suites (forked test JVM). */
+/** One shared local session for all suites (forked test JVM): the
+  * [[GraftSession]] contract on 4 cores, with exactly one override. */
 object TestSession {
+  /** The keys this session sets differently from [[GraftSession.conf]].
+    * The small-scan fan-out stays off so plan-shape specs audit the at-scale
+    * plan, where the fan-out never fires (e.g. IncrementalDedupSpec's
+    * shuffle-free signing). */
+  val overrides: Map[String, String] =
+    Map("spark.graft.parallelizeSmallScans" -> "false")
+
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder("4")
       .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.enableJsonExpressionOptimization", "false")
-      .config("spark.ui.enabled", "false")
+      .config(overrides)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
