@@ -73,13 +73,17 @@ object Bench {
         s""""queries":$qs,"queries_run1":$run1,"failed":$failedJson,""" +
         s""""loadavg_start":$loadStart,"loadavg_end":$loadEnd,"sf":"$sfDir"}"""
     println(line)
-    // The driver's bench artifact keeps only the output TAIL (~2 KB), which
+    // Captured stdout may keep only the output TAIL (~2 KB), which
     // truncates the 130+-entry per-query map — persist the full line to a
-    // file too so every per-query timing survives (BENCH_OUT overrides).
-    val outFile = sys.env.getOrElse("BENCH_OUT", "bench_last_run.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case e: Exception =>
+    // file too so every per-query timing survives. The default sits under
+    // the ignored build dir so a run never dirties the checkout (BENCH_OUT
+    // overrides).
+    val outFile = sys.env.getOrElse("BENCH_OUT", "target/bench_last_run.json")
+    try {
+      val out = java.nio.file.Paths.get(outFile).toAbsolutePath
+      java.nio.file.Files.createDirectories(out.getParent)
+      java.nio.file.Files.write(out, (line + "\n").getBytes("UTF-8"))
+    } catch { case e: Exception =>
       System.err.println(s"[bench] WARNING: could not write $outFile: $e")
     }
     spark.stop()

@@ -656,38 +656,6 @@ object Multimodal {
     }
   }
 
-  /**
-   * Cross-modal NEAR-duplicate matching (verdict-r14 item 4): which
-   * standalone images are perceptual copies of frames inside videos —
-   * including RESIZED copies, the case [[videoImageMatch]]'s exact digest
-   * can never see. Both sides reduce to the [[gridMeans]] fingerprint
-   * (per-channel region means on a fixed grid, scaled exact longs):
-   * nearest-neighbor rescales produce bit-identical fingerprints, and
-   * re-encodes land within a small L1 — so the match key deliberately
-   * EXCLUDES width/height and buckets on (channels, quantized
-   * fingerprint) only. Candidates come from that bucket equi-join
-   * (Σ|bucket|² pair space, the imageNearDup/LSH cost model); every
-   * candidate verifies with the exact L1 over the full scaled vectors.
-   *
-   * Reject rules are the strict ones: a bad container or ANY bad frame
-   * drops the whole video ([[videoNearDup]]); the image payload must
-   * carry its full pixel region ([[videoImageMatch]]); and both sides
-   * additionally require grid | w and grid | h (a fingerprint from ragged
-   * regions would not be resize-stable). Pixels die at the fingerprint —
-   * at 100 TB the shuffle moves (id, channels, g²·c longs) tuples only.
-   *
-   * HOT-BUCKET CAP (`maxBucket`, per side): a bucket holding more than
-   * `maxBucket` frames or more than `maxBucket` images is a SATURATED
-   * fingerprint cell — solid-color frames, boilerplate intros — whose
-   * members are by construction common, not near-duplicate discoveries;
-   * the whole bucket is dropped (the saxMotifs maxWordSize / LSH blocking
-   * hygiene). Without it the pair space is Σ v_b·i_b, which a single hot
-   * cell turns quadratic — measured on the 100× synthetic corpus: 812M
-   * candidate pairs (hottest cell 4 300 frames × 1 947 images) vs a
-   * bounded ≤ cap² per cell with it. Tune the cap up with grid/channel
-   * richness, exactly like SAX segments/alphabet.
-   * Output: (video_id, frame_idx, image_id, l1, near_dup).
-   */
   /** The video half of the cross-modal decode: offset-indexed GVID frames
     * to per-frame [[gridMeans]] fingerprints, strict reject rules (a bad
     * container or ANY bad frame drops the whole video; frames must have
@@ -756,6 +724,38 @@ object Multimodal {
         col("f.gvec").as("gvec"))
   }
 
+  /**
+   * Cross-modal NEAR-duplicate matching (verdict-r14 item 4): which
+   * standalone images are perceptual copies of frames inside videos —
+   * including RESIZED copies, the case [[videoImageMatch]]'s exact digest
+   * can never see. Both sides reduce to the [[gridMeans]] fingerprint
+   * (per-channel region means on a fixed grid, scaled exact longs):
+   * nearest-neighbor rescales produce bit-identical fingerprints, and
+   * re-encodes land within a small L1 — so the match key deliberately
+   * EXCLUDES width/height and buckets on (channels, quantized
+   * fingerprint) only. Candidates come from that bucket equi-join
+   * (Σ|bucket|² pair space, the imageNearDup/LSH cost model); every
+   * candidate verifies with the exact L1 over the full scaled vectors.
+   *
+   * Reject rules are the strict ones: a bad container or ANY bad frame
+   * drops the whole video ([[videoNearDup]]); the image payload must
+   * carry its full pixel region ([[videoImageMatch]]); and both sides
+   * additionally require grid | w and grid | h (a fingerprint from ragged
+   * regions would not be resize-stable). Pixels die at the fingerprint —
+   * at 100 TB the shuffle moves (id, channels, g²·c longs) tuples only.
+   *
+   * HOT-BUCKET CAP (`maxBucket`, per side): a bucket holding more than
+   * `maxBucket` frames or more than `maxBucket` images is a SATURATED
+   * fingerprint cell — solid-color frames, boilerplate intros — whose
+   * members are by construction common, not near-duplicate discoveries;
+   * the whole bucket is dropped (the saxMotifs maxWordSize / LSH blocking
+   * hygiene). Without it the pair space is Σ v_b·i_b, which a single hot
+   * cell turns quadratic — measured on the 100× synthetic corpus: 812M
+   * candidate pairs (hottest cell 4 300 frames × 1 947 images) vs a
+   * bounded ≤ cap² per cell with it. Tune the cap up with grid/channel
+   * richness, exactly like SAX segments/alphabet.
+   * Output: (video_id, frame_idx, image_id, l1, near_dup).
+   */
   def crossModalNearDup(videos: DataFrame, vidId: Column, vidBin: Column,
       images: DataFrame, imgId: Column, imgBin: Column, grid: Int = 2,
       meanScale: Long = 16L, quant: Long = 64L, maxL1: Long = 96L,

@@ -8,9 +8,9 @@ import org.apache.spark.sql.functions._
  * Kafka source (KafkaUtils.java:15-28: topic `flight-events`, value-only
  * string deserialization, latest offsets, throwaway consumer group). Here the
  * source is a small ADT so the same pipeline runs from Kafka in production
- * and from files / rate / memory streams in tests — every variant produces a
- * single string `value` column, the contract [[graft.operators.FlightOps
- * .parseFlightEvents]] consumes.
+ * and from files, the [[FlightGen]] generator or memory streams in tests —
+ * every variant produces a single string `value` column, the contract
+ * [[graft.operators.FlightOps.parseFlightEvents]] consumes.
  *
  * Offset semantics divergence (documented, deliberate): the reference's fresh
  * `flight-consumer-<epochMillis>` group id means "start from now, never
@@ -72,27 +72,6 @@ object EventSource {
         .option("maxFilesPerTrigger", maxFilesPerTrigger)
         .text(path)
         .select(col("value"))
-  }
-
-  /** Synthetic rate source mapped to flight-event JSON — load/perf testing
-    * without Kafka. Deterministic given the rate stream's (timestamp, value). */
-  final case class Rate(rowsPerSecond: Int = 1000) extends EventSource {
-    def load(spark: SparkSession): DataFrame =
-      spark.readStream.format("rate")
-        .option("rowsPerSecond", rowsPerSecond)
-        .load()
-        .select(to_json(struct(
-          concat(lit("F"), col("value")).as("flightId"),
-          concat(lit("FL-"), col("value") % 1000).as("flightNumber"),
-          concat(lit("AL"), col("value") % 7).as("airline"),
-          concat(lit("O"), col("value") % 11).as("origin"),
-          concat(lit("D"), col("value") % 13).as("destination"),
-          date_format(col("timestamp"), "yyyy-MM-dd'T'HH:mm:ss").as("scheduledArrival"),
-          date_format(col("timestamp") + expr("make_interval(0,0,0,0,0,cast(value % 120 - 30 as int),0)"),
-            "yyyy-MM-dd'T'HH:mm:ss").as("actualArrival"),
-          (col("value") % 3 === 0).as("delayed"),
-          concat(lit("u"), col("value") % 100).as("userId")
-        )).as("value"))
   }
 
   /** The deterministic DataSource V2 generator ([[FlightGenProvider]]):

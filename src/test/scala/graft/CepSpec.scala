@@ -1,8 +1,13 @@
 package graft
 
 import java.sql.Timestamp
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import graft.operators.Cep
+import graft.streaming.StatefulOps
 
 /**
  * Hand-stream checks for the CEP sequence matcher (corpus-scale output is
@@ -746,5 +751,111 @@ class CepSpec extends SparkSpec {
         .as[(Long, Long, Long)].collect().toSet
       assert(got == expected)
     } finally q.stop()
+  }
+
+  /** (user, tie, role, second): `role` is a pattern step, "n" (negation)
+    * or "x" (neither) — at most one role per row, the documented contract. */
+  private type CepRow = (Long, Long, String, Long)
+
+  /** One generated case: ≤3 keys, ≤30 events with unique ties and seconds
+    * from 0..20, delivered in (ts, tie) order and cut into 1–4 pieces. The
+    * range is small, so equal timestamps are common. Steps are drawn four
+    * times as often as "n" or "x", and two thirds of the step-i rows fall
+    * in seconds 3i..3i+4 rather than anywhere, so in-order chains occur
+    * often enough for matches not to be rare; with 8–10 s windows, spans
+    * past the window and spans of exactly the window occur too. */
+  private def cepCaseGen(steps: Seq[String]): Gen[Seq[Seq[CepRow]]] = {
+    val roles = steps ++ Seq("n", "x")
+    val row = for {
+      r <- Gen.frequency(roles.indices.map(i =>
+        (if (i < steps.size) 4 else 1) -> Gen.const(i)): _*)
+      sec <- if (r < steps.size)
+          Gen.frequency(1 -> Gen.choose(0L, 20L),
+            2 -> Gen.choose(3L * r, 3L * r + 4))
+        else Gen.choose(0L, 20L)
+    } yield (roles(r), sec)
+    for {
+      n <- Gen.choose(0, 30)
+      nKeys <- Gen.choose(1L, 3L)
+      raw <- Gen.listOfN(n, Gen.zip(Gen.choose(1L, nKeys), row))
+      nPieces <- Gen.choose(1, 4)
+      cuts <- Gen.listOfN(nPieces - 1, Gen.choose(0, n))
+    } yield {
+      val rows = raw.zipWithIndex
+        .map { case ((u, (role, sec)), i) => (u, i.toLong, role, sec) }
+        .sortBy(r => (r._4, r._2))
+      val bounds = 0 +: cuts.sorted :+ n
+      bounds.zip(bounds.tail).map { case (lo, hi) => rows.slice(lo, hi) }
+    }
+  }
+
+  /** Stream/batch parity over 20 seeded cases. Case c lives on keys
+    * 10c+1..10c+3, so one query carries them all: micro-batch j holds every
+    * case's j-th piece, and per-key state keeps the cases apart. */
+  private def assertCepParity[T: Encoder](steps: Seq[String], name: String)(
+      stream: DataFrame => Dataset[T], batch: DataFrame => Dataset[T]): Unit = {
+    val params = Gen.Parameters.default.withSize(30)
+    // one seed per case: successive `next` seeds would shift one draw
+    // stream by a step and make the cases near copies of each other
+    val cases = (0 until 20).map { c =>
+      cepCaseGen(steps)(params, Seed(20261019L + c)).get
+        .map(_.map { case (u, t, r, s) => (10L * c + u, t, r, s) })
+    }
+    def framed(df: DataFrame) = df.toDF("user_id", "event_id", "event_type", "sec")
+      .withColumn("ts", timestamp_seconds(col("sec")))
+    val expected = batch(framed(cases.flatten.flatten.toDF())).collect().toSet
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[CepRow]
+    val q = stream(framed(input.toDF())).writeStream.format("memory")
+      .queryName(name)
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory(name).toString)
+      .outputMode("append").start()
+    val got = try {
+      (0 until 4).foreach { j =>
+        val piece = cases.flatMap(_.lift(j).getOrElse(Nil))
+        if (piece.nonEmpty) { input.addData(piece: _*); q.processAllAvailable() }
+      }
+      spark.table(name).as[T].collect().toSet
+    } finally q.stop()
+    info(s"${cases.size} cases, ${cases.flatten.flatten.size} events, " +
+      s"${expected.size} matches")
+    assert(expected.size >= 5, s"vacuous sample: ${expected.size} matches")
+    assert(got == expected, s"stream-only ${got -- expected}, " +
+      s"batch-only ${expected -- got}; cases $cases")
+  }
+
+  private def byRole(steps: Seq[String]) = steps.map(s => col("event_type") === s)
+  private val isNeg = col("event_type") === "n"
+
+  test("property: cepStream equals lastSeqMatch over in-order micro-batch cuts") {
+    val Seq(a, b, c) = byRole(Seq("a", "b", "c"))
+    assertCepParity(Seq("a", "b", "c"), "cep_prop")(
+      ev => StatefulOps.cepStream(ev, "user_id", "ts", "event_id",
+          a, b, c, isNeg, 8L)
+        .select(col("key"), col("close_id"), col("a_us"), col("b_us"),
+          col("c_us"), col("gap_seconds"))
+        .as[(Long, Long, Long, Long, Long, Long)],
+      ev => Cep.lastSeqMatch(ev, col("user_id"), col("ts"), col("event_id"),
+          a, b, c, isNeg, 8L)
+        .select(col("key"), col("close_id"), unix_micros(col("a_ts")),
+          unix_micros(col("b_ts")), unix_micros(col("c_ts")),
+          col("gap_seconds"))
+        .as[(Long, Long, Long, Long, Long, Long)])
+  }
+
+  test("property: cepStreamN at K=4 equals lastSeqMatchN over in-order micro-batch cuts") {
+    val steps = Seq("a", "b", "c", "d")
+    assertCepParity(steps, "cepn_prop")(
+      ev => StatefulOps.cepStreamN(ev, "user_id", "ts", "event_id",
+          byRole(steps), isNeg, 10L)
+        .select(col("key"), col("close_id"), col("step_us"), col("gap_seconds"))
+        .as[(Long, Long, Seq[Long], Long)],
+      ev => Cep.lastSeqMatchN(ev, col("user_id"), col("ts"), col("event_id"),
+          byRole(steps), isNeg, 10L)
+        .select(col("key"), col("close_id"),
+          array((1 to 4).map(i => unix_micros(col(s"ts_$i"))): _*),
+          col("gap_seconds"))
+        .as[(Long, Long, Seq[Long], Long)])
   }
 }
