@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,8 +26,11 @@ import graft.operators.{Dedup, Learn, Similarity, TextOps}
  * Determinism: every trainer in the ladder is integer-exact on the
  * quantized/md5-hash domain, so artifact bytes are a pure function of the
  * input dir and parquet round-trips are lossless (longs/strings end to
- * end) — rebuilding in another JVM yields the same artifact, which is why
- * a cross-process cache hit (the parquet already on disk) is also safe.
+ * end) — which is why a served row equals its training twin.
+ *
+ * Artifacts live and die with the JVM that built them: each JVM builds into
+ * its own root and deletes it at exit, so no process ever serves an
+ * artifact that another process (or older code) built.
  */
 object Artifacts {
   private val memo = scala.collection.concurrent.TrieMap.empty[String, Any]
@@ -33,70 +38,29 @@ object Artifacts {
   private def cached[A](key: String)(build: => A): A =
     memo.getOrElseUpdate(key, build).asInstanceOf[A]
 
-  /** Per-(sf-dir, family) artifact root. The readable path component is a
-    * lossy sanitization, so a collision-free md5 over the FULL dir string is
-    * appended ('/a/b' vs '/a_b' no longer share a root — r12 advice item).
-    * The digest also folds in a FILESYSTEM fingerprint of the family's
-    * source table — every file's (relative path, size, mtime) under
-    * `<dir>/<table>.parquet` — so a corpus regenerated in place (new driver
-    * round, new seed) lands in a fresh root instead of serving a stale
-    * cross-process artifact. Metadata-only: no Spark job, no data scan.
-    *
-    * Residual assumption: a corpus rewritten WITHOUT touching file sizes or
-    * mtimes (byte-surgical edits) is indistinguishable; no real writer does
-    * that — parquet rewrites always move mtimes. Within one JVM the memo is
-    * keyed by path only, so same-process regeneration still requires a new
-    * dir (the pre-r13 contract, now documented). */
-  private def root(dir: String, family: String, table: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.update(dir.getBytes("UTF-8"))
-    val src = new java.io.File(s"$dir/$table.parquet")
-    def fold(f: java.io.File, rel: String): Unit = {
-      md.update(s"|$rel:${f.length}:${f.lastModified}".getBytes("UTF-8"))
-      Option(f.listFiles()).foreach(_.sortBy(_.getName)
-        .foreach(c => fold(c, s"$rel/${c.getName}")))
-    }
-    if (src.exists()) fold(src, src.getName)
-    val digest = md.digest().map("%02x".format(_)).mkString.take(16)
-    s"${System.getProperty("java.io.tmpdir")}/graft-artifacts/$key-$digest/$family"
+  /** This JVM's artifact root, `<java.io.tmpdir>/graft-artifacts-*`,
+    * created on first use and deleted when the JVM exits: no artifact
+    * outlives the process (and so the code) that built it. */
+  private lazy val jvmRoot: Path = {
+    val r = Files.createTempDirectory("graft-artifacts-")
+    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRec(r)))
+    r
   }
 
-  /** Cross-process publication protocol: artifacts are BUILT under a
-    * process-unique `<root>.tmp-*` directory and atomically renamed into
-    * place, so a concurrent harness JVM on the same sf-dir can never read a
-    * half-written parquet (the pre-r13 non-atomic `overwrite` race). An
-    * existing root is COMPLETE by construction (rename is all-or-nothing)
-    * and — because every trainer in the ladder is deterministic — byte-wise
-    * interchangeable with what this process would build, so losing the
-    * publication race just means adopting the winner's copy. */
-  private def published(fin: String)(build: String => Unit): String = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val finPath = Paths.get(fin)
-    if (Files.exists(finPath)) return fin
-    val tmp = fin + ".tmp-" + java.lang.ProcessHandle.current().pid() +
-      "-" + java.lang.System.nanoTime()
-    // a failed build must not leak its half-written tmp dir (r13 advice)
-    try build(tmp)
-    catch { case e: Throwable => deleteRec(new java.io.File(tmp)); throw e }
-    Files.createDirectories(finPath.getParent)
-    try Files.move(Paths.get(tmp), finPath, StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case e: java.nio.file.FileSystemException =>
-        // Losing the publication race (FileAlreadyExists / DirectoryNotEmpty)
-        // is fine — the winner's deterministic twin is byte-interchangeable.
-        // Any OTHER rename failure (e.g. AtomicMoveNotSupported) must surface
-        // HERE, not later as a confusing missing-path read (r13 advice): only
-        // swallow when the final path actually exists.
-        deleteRec(new java.io.File(tmp))
-        if (!Files.exists(finPath)) throw e
-    }
-    fin
+  /** Builds one family's artifacts into a fresh directory under
+    * [[jvmRoot]] and returns its path. Every build gets its own directory,
+    * so concurrent or retried builds never share files. */
+  private def built(family: String)(build: String => Unit): String = {
+    val dir = Files.createTempDirectory(jvmRoot, family).toString
+    build(dir)
+    dir
   }
 
-  private def deleteRec(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete(): Unit
+  private def deleteRec(root: Path): Unit = {
+    val paths = Files.walk(root)
+    try paths.sorted(java.util.Comparator.reverseOrder[Path]())
+      .forEach(p => Files.deleteIfExists(p): Unit)
+    finally paths.close()
   }
 
   /** IVF-PQ serving index over the embeddings table — same hyperparameters
@@ -104,13 +68,13 @@ object Artifacts {
     * nCells=16). Returns (coarsePath, codebookPath, packedCodesPath). */
   def ivfPq(s: SparkSession, d: String): (String, String, String) =
     cached(s"ivfpq:$d") {
-      val r = published(root(d, "ivfpq", "embeddings")) { tmp =>
+      val r = built("ivfpq") { out =>
         val emb = Tables.embeddings(s, d)
         val (coarse, pqc, codes) = Similarity.ivfPqIndexBuild(
           emb, "vec_id", "embedding", m = 4, ksub = 16, iters = 2, nCells = 16)
-        Similarity.writeCoarse(coarse, s"$tmp/coarse")
-        Similarity.writeCodebook(pqc, s"$tmp/codebook")
-        Similarity.packCodes(codes).write.mode("overwrite").parquet(s"$tmp/codes")
+        Similarity.writeCoarse(coarse, s"$out/coarse")
+        Similarity.writeCodebook(pqc, s"$out/codebook")
+        Similarity.packCodes(codes).write.mode("overwrite").parquet(s"$out/codes")
       }
       (s"$r/coarse", s"$r/codebook", s"$r/codes")
     }
@@ -133,7 +97,7 @@ object Artifacts {
       if (cutBoxed == null) (-1L, "", "", "")
       else {
         val cut = cutBoxed.longValue()
-        val r = published(root(d, "dedup", "documents")) { tmp =>
+        val r = built("dedup") { out =>
           val oldDocs = docs.filter(col("doc_id") < cut)
           val index = Dedup.signatureIndex(oldDocs, col("text"), col("doc_id"))
             .localCheckpoint()
@@ -143,13 +107,13 @@ object Artifacts {
               Dedup.lshCandidates(index), shingles)
             .filter(col("jaccard") >= 0.8)
             .select(col("doc_a"), col("doc_b")).localCheckpoint()
-          index.write.mode("overwrite").parquet(s"$tmp/index")
+          index.write.mode("overwrite").parquet(s"$out/index")
           Dedup.connectedComponents(oldDocs.select(col("doc_id").as("id")), oldEdges)
-            .write.mode("overwrite").parquet(s"$tmp/labels")
+            .write.mode("overwrite").parquet(s"$out/labels")
           oldDocs.select(col("doc_id"))
             .join(oldEdges.select(col("doc_b").as("doc_id")).distinct(),
               Seq("doc_id"), "left_anti")
-            .write.mode("overwrite").parquet(s"$tmp/old_keep")
+            .write.mode("overwrite").parquet(s"$out/old_keep")
         }
         (cut, s"$r/index", s"$r/labels", s"$r/old_keep")
       }
@@ -160,10 +124,10 @@ object Artifacts {
     * ordered literal rule form. */
   def bpeRules(s: SparkSession, d: String): Seq[(String, String)] =
     cached(s"bpe:$d") {
-      val r = published(root(d, "bpe", "documents")) { tmp =>
+      val r = built("bpe") { out =>
         TextOps.writeBpeVocab(
           TextOps.bpeTrain(Tables.documents(s, d), col("text"), merges = 3),
-          s"$tmp/vocab")
+          s"$out/vocab")
       }
       TextOps.readBpeVocab(s, s"$r/vocab")
     }
@@ -174,10 +138,10 @@ object Artifacts {
     * literal form. */
   def perceptronWeights(s: SparkSession, d: String): Array[Long] =
     cached(s"perceptron:$d") {
-      val r = published(root(d, "learn", "documents")) { tmp =>
+      val r = built("learn") { out =>
         val feats = Learn.markerFeatures(Tables.documents(s, d),
           col("doc_id"), col("text"))
-        Learn.writeWeights(s, s"$tmp/weights",
+        Learn.writeWeights(s, s"$out/weights",
           Learn.perceptronWeights(feats, iters = 16).toSeq)
       }
       Learn.readWeights(s, s"$r/weights")
@@ -208,9 +172,9 @@ object Artifacts {
     * (node/label/is_seed/origin_round) round-trip losslessly. */
   def labelSpread(s: SparkSession, d: String): String =
     cached(s"labelspread:$d") {
-      val r = published(root(d, "labelspread", "embeddings")) { tmp =>
+      val r = built("labelspread") { out =>
         labelSpreadChain(Tables.embeddings(s, d))
-          .write.mode("overwrite").parquet(s"$tmp/labels")
+          .write.mode("overwrite").parquet(s"$out/labels")
       }
       s"$r/labels"
     }
@@ -224,14 +188,14 @@ object Artifacts {
     * strings round-trip losslessly. */
   def entityIndex(s: SparkSession, d: String): String =
     cached(s"entityidx:$d") {
-      val r = published(root(d, "entityidx", "customer")) { tmp =>
+      val r = built("entityidx") { out =>
         val base = Tables.customer(s, d).select(
           col("c_custkey").as("id"), col("c_name").as("name"),
           concat_ws(":", col("c_nationkey").cast("string"),
             col("c_mktsegment")).as("blk"))
         Dedup.entityBlockingIndex(base, col("id"), col("name"), col("blk"),
             Queries.entityPieces, maxKeySize = 64)
-          .write.mode("overwrite").parquet(s"$tmp/index")
+          .write.mode("overwrite").parquet(s"$out/index")
       }
       s"$r/index"
     }
@@ -248,11 +212,11 @@ object Artifacts {
     * artifact is a join + window. */
   def entityLabels(s: SparkSession, d: String): String =
     cached(s"entitylabels:$d") {
-      val r = published(root(d, "entitylabels", "customer")) { tmp =>
+      val r = built("entitylabels") { out =>
         val dirty = Queries.dirtyCustomers(s, d)
         Dedup.entityResolve(dirty, col("id"), col("name"), col("blk"),
             Queries.entityPieces, maxDist = 2, maxKeySize = 64)
-          .write.mode("overwrite").parquet(s"$tmp/labels")
+          .write.mode("overwrite").parquet(s"$out/labels")
       }
       s"$r/labels"
     }
@@ -265,15 +229,14 @@ object Artifacts {
     * checkpointed synthesis stages (~1.85M frames at sf10) and their GC.
     * A real deployment reads payloads from storage; this fixture IS that
     * storage. Binary columns round-trip parquet byte-exactly and the
-    * schedules are deterministic functions of `documents`, so the
-    * cross-process publication contract holds unchanged. Returns the
+    * schedules are deterministic functions of `documents`. Returns the
     * fixture root; tables: vnd_videos, vimatch_videos/images,
     * cross_videos/images, phash_videos/images, phashy_videos/images. */
   def mediaPayloads(s: SparkSession, d: String): String =
     cached(s"media:$d") {
-      published(root(d, "media", "documents")) { tmp =>
+      built("media") { out =>
         def write(df: DataFrame, name: String): Unit =
-          df.write.mode("overwrite").parquet(s"$tmp/$name")
+          df.write.mode("overwrite").parquet(s"$out/$name")
         write(MediaFixtures.vndVideos(s, d), "vnd_videos")
         val (vmv, vmi) = MediaFixtures.vimatchPair(s, d)
         write(vmv, "vimatch_videos"); write(vmi, "vimatch_images")
@@ -309,25 +272,25 @@ object Artifacts {
     * their training twins (one oracle gates both). */
   def annEval(s: SparkSession, d: String): String =
     cached(s"anneval:$d") {
-      published(root(d, "anneval", "embeddings")) { tmp =>
+      built("anneval") { out =>
         val emb = Tables.embeddings(s, d)
         emb.select(col("vec_id"),
             Similarity.lshBucket(Similarity.asDouble(col("embedding")), 8)
               .as("bucket"))
-          .write.mode("overwrite").parquet(s"$tmp/lsh_corpus")
+          .write.mode("overwrite").parquet(s"$out/lsh_corpus")
         val cents = Similarity.kmeansCentroids(emb, "vec_id", "embedding",
           16, 2).localCheckpoint()
         cents.select(col("cell_id").cast("int").as("cell_id"), col("cellv"))
           .repartition(1).sortWithinPartitions("cell_id")
-          .write.mode("overwrite").parquet(s"$tmp/ivf_centroids")
+          .write.mode("overwrite").parquet(s"$out/ivf_centroids")
         Similarity.assignCells(emb, cents, "vec_id", "embedding")
           .select(col("cell_id"), col("vec_id").as("corpus_id"))
-          .write.mode("overwrite").parquet(s"$tmp/ivf_corpus")
+          .write.mode("overwrite").parquet(s"$out/ivf_corpus")
         val pqc = Similarity.pqTrain(emb, "vec_id", "embedding", m = 4,
           ksub = 16, iters = 2).localCheckpoint()
-        Similarity.writeCodebook(pqc, s"$tmp/pq_codebook")
+        Similarity.writeCodebook(pqc, s"$out/pq_codebook")
         Similarity.pqEncode(emb, pqc, "vec_id", "embedding", m = 4)
-          .write.mode("overwrite").parquet(s"$tmp/pq_codes")
+          .write.mode("overwrite").parquet(s"$out/pq_codes")
       }
     }
 
@@ -337,10 +300,10 @@ object Artifacts {
     * stream-static-joins against. */
   def seasonalProfile(s: SparkSession, d: String): String =
     cached(s"seasonal:$d") {
-      val r = published(root(d, "seasonal", "events")) { tmp =>
+      val r = built("seasonal") { out =>
         graft.operators.TimeSeries.seasonalProfile(Tables.events(s, d),
             col("user_id"), hour(col("ts")), col("value"), 1000L)
-          .write.mode("overwrite").parquet(s"$tmp/profile")
+          .write.mode("overwrite").parquet(s"$out/profile")
       }
       s"$r/profile"
     }
@@ -351,10 +314,10 @@ object Artifacts {
     * batch re-scores and the streaming `cusumStream` both join it). */
   def keyProfile(s: SparkSession, d: String): String =
     cached(s"keyprofile:$d") {
-      val r = published(root(d, "keyprofile", "events")) { tmp =>
+      val r = built("keyprofile") { out =>
         graft.operators.TimeSeries.keyProfile(Tables.events(s, d),
             col("user_id"), col("value"), 1000L)
-          .write.mode("overwrite").parquet(s"$tmp/profile")
+          .write.mode("overwrite").parquet(s"$out/profile")
       }
       s"$r/profile"
     }

@@ -9,14 +9,15 @@ import org.apache.spark.sql.functions._
  * `multimodal_video_image_match` / `multimodal_cross_near_dup` /
  * `multimodal_phash_near_dup` rows decode. One source of truth, consumed by
  * [[Artifacts.mediaPayloads]], which materializes each table ONCE per
- * sf-dir as a parquet fixture (verdict-r16 item 1): a real deployment reads
- * payloads from storage — a materialized binary column — so the fixture IS
- * the deployment shape, and the bench rows measure decode + bucket-join
- * instead of re-paying three checkpointed synthesis stages (~1.85M frames
- * at sf10) plus their GC per run. The schedules themselves are UNCHANGED
- * from the in-row r15/r16 forms — the oracle re-derives every expectation
- * from the `documents` text/source arithmetic, never the bytes, so the
- * moved materialization is oracle-invisible (re-gated at sf0.01 AND sf0.1).
+ * sf-dir per JVM as a parquet fixture (verdict-r16 item 1): a real
+ * deployment reads payloads from storage — a materialized binary column —
+ * so the fixture IS the deployment shape, and the bench rows measure
+ * decode + bucket-join instead of re-paying three checkpointed synthesis
+ * stages (~1.85M frames at sf10) plus their GC per run. The schedules
+ * themselves are UNCHANGED from the in-row r15/r16 forms — the oracle
+ * re-derives every expectation from the `documents` text/source
+ * arithmetic, never the bytes, so the moved materialization is
+ * oracle-invisible (re-gated at sf0.01 AND sf0.1).
  *
  * Schedule provenance (kept verbatim from the rows that pinned them):
  *  - vnd: 2×2×1 frames from text slices at a doc-dependent start offset

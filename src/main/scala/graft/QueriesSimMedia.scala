@@ -535,7 +535,7 @@ object QueriesSimMedia {
 
     // WARM twin of graph_label_spread: the propagated labeling loads from
     // the persisted artifact (Artifacts.labelSpread — built once per
-    // (sf-dir, family), atomic-rename published) and serves as a PLAIN
+    // (sf-dir, family) per JVM) and serves as a PLAIN
     // PARQUET SCAN — zero exchanges, zero aggregates, no graph subtree —
     // gated on the SAME oracle as the training twin. This is how a
     // propagated corpus labeling is actually consumed at 100 TB: train on

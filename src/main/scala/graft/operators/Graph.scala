@@ -293,11 +293,9 @@ object Graph {
     // band filter. The per-cell scalar here is the cap CUTOFF: the capped
     // base side keeps the `maxBucketSize` smallest ids of a cell, so "old
     // was kept in cell (bp, u)" ⟺ old_id ≤ max(kept ids of that cell).
-    // Wide configurations keep the reference join form.
-    val nBuckets = 1 << math.min(rowsPerBand, 30)
-    if (rowsPerBand > 12 || nBands.toLong * nBuckets > 4096)
-      return labelAdmitJoined(base, baseLabels, newBatch, newSeeds, idCol,
-        vecCol, k, nBands, rowsPerBand, dim, maxBucketSize)
+    require(rowsPerBand <= 12 && (nBands.toLong << rowsPerBand) <= 4096,
+      s"labelAdmit: $nBands bands · 2^$rowsPerBand exceed the 4096-cell cap")
+    val nBuckets = 1 << rowsPerBand
     def buckets(df: DataFrame): DataFrame = {
       val b =
         if (dim > 0) lshBandBucketsFast(col("v"), nBands, rowsPerBand, dim)
@@ -367,15 +365,15 @@ object Graph {
     seedOut.unionByName(admitted)
   }
 
-  /** Reference implementation of [[labelAdmit]] (the pre-r18 form, also the
-    * fallback for cell spaces beyond the literal-lookup cap): cross-band
-    * duplicate candidates removed by a full distinct() over the scored
-    * pairs. Kept verbatim so the static-cutoff form stays parity-checked
-    * against an independent derivation (GraphSpec), the knnGraphJoined
-    * discipline. */
-  def labelAdmitJoined(base: DataFrame, baseLabels: DataFrame,
-      newBatch: DataFrame, newSeeds: DataFrame, idCol: String, vecCol: String,
-      k: Int = 5, nBands: Int = 4, rowsPerBand: Int = 2, dim: Int = -1,
+  /** Reference implementation of [[labelAdmit]] (the pre-r18 form):
+    * cross-band duplicate candidates removed by a full distinct() over the
+    * scored pairs. Kept verbatim so the static-cutoff form stays
+    * parity-checked against an independent derivation (GraphSpec), the
+    * knnGraphJoined discipline. */
+  private[graft] def labelAdmitJoined(base: DataFrame,
+      baseLabels: DataFrame, newBatch: DataFrame, newSeeds: DataFrame,
+      idCol: String, vecCol: String, k: Int = 5, nBands: Int = 4,
+      rowsPerBand: Int = 2, dim: Int = -1,
       maxBucketSize: Int = 1024): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import Similarity.{asDouble, lshBandBuckets, lshBandBucketsFast, norm}

@@ -1351,11 +1351,10 @@ object Similarity {
     // hash-aggregating every scored pair (measured: 4.06M pairs → 3.4M-row
     // exchange + two O(pairs) HashAggregates at avgHashProbe 479, ~18s of a
     // 39s-CPU query, for a 1.48× dedup the rank window re-cuts to 320k rows
-    // anyway). Pathologically wide configurations keep the join form.
-    val nBuckets = 1 << math.min(rowsPerBand, 30)
-    if (rowsPerBand > 12 || nBands.toLong * nBuckets > 4096)
-      return knnGraphJoined(embeddings, idCol, vecCol, k, nBands, rowsPerBand,
-        dim, maxBucketSize)
+    // anyway). The cap below is far above every caller's ≤ 16 cells.
+    require(rowsPerBand <= 12 && (nBands.toLong << rowsPerBand) <= 4096,
+      s"knnGraph: $nBands bands · 2^$rowsPerBand exceed the 4096-cell cap")
+    val nBuckets = 1 << rowsPerBand
     val bandBuckets =
       if (dim > 0) lshBandBucketsFast(col("v"), nBands, rowsPerBand, dim)
       else lshBandBuckets(col("v"), nBands, rowsPerBand)
@@ -1437,16 +1436,14 @@ object Similarity {
       .select(col("src_id"), col("rank"), col("dst_id"), col("cosine"))
   }
 
-  /** Reference implementation of [[knnGraph]] (the pre-r18 windowed form,
-    * also the fallback for configurations whose cell space exceeds the
-    * literal-lookup cap): per-cell stats via a (band, bucket) Window and
-    * cross-band duplicates removed by a full distinct() over the scored
-    * pairs. Kept verbatim so the static-fold form stays parity-checked
-    * against an independent derivation (KnnGraphSpec), the
-    * assignCellsJoined discipline. */
-  def knnGraphJoined(embeddings: DataFrame, idCol: String, vecCol: String,
-      k: Int, nBands: Int = 4, rowsPerBand: Int = 2, dim: Int = -1,
-      maxBucketSize: Int = 1024): DataFrame = {
+  /** Reference implementation of [[knnGraph]] (the pre-r18 windowed form):
+    * per-cell stats via a (band, bucket) Window and cross-band duplicates
+    * removed by a full distinct() over the scored pairs. Kept verbatim so
+    * the static-fold form stays parity-checked against an independent
+    * derivation (KnnGraphSpec), the assignCellsJoined discipline. */
+  private[graft] def knnGraphJoined(embeddings: DataFrame, idCol: String,
+      vecCol: String, k: Int, nBands: Int = 4, rowsPerBand: Int = 2,
+      dim: Int = -1, maxBucketSize: Int = 1024): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val bandBuckets =
       if (dim > 0) lshBandBucketsFast(col("v"), nBands, rowsPerBand, dim)

@@ -255,6 +255,21 @@ class GraphSpec extends SparkSpec {
         s"parity broke at cap $cap")
   }
 
+  test("labelAdmit: a cell space over the 4096-cell cap fails before any Spark job") {
+    import spark.implicits._
+    // 1·2^13 cells; the inputs throw if any job evaluates them, so only the
+    // up-front check can raise IllegalArgumentException
+    val poisoned = spark.range(4).select(col("id").as("vec_id"),
+      udf((id: Long) =>
+        if (id >= 0) throw new IllegalStateException("a Spark job ran")
+        else Seq(0f)).apply(col("id")).as("embedding"))
+    val e = intercept[IllegalArgumentException](Graph.labelAdmit(poisoned,
+      Seq((0L, 1)).toDF("node", "label"), poisoned,
+      Seq.empty[(Long, Int)].toDF("node", "label"), "vec_id", "embedding",
+      k = 3, nBands = 1, rowsPerBand = 13, dim = 8))
+    assert(e.getMessage.contains("4096"))
+  }
+
   test("labelPropagate: partition-count invariant (integer votes, total tie order)") {
     import spark.implicits._
     val edges = (1 to 40).flatMap(i =>

@@ -71,6 +71,18 @@ class KnnGraphSpec extends SparkSpec {
         nBands = 2, rowsPerBand = 2)))
   }
 
+  test("knnGraph: a cell space over the 4096-cell cap fails before any Spark job") {
+    // 1·2^13 cells; the input throws if any job evaluates it, so only the
+    // up-front check can raise IllegalArgumentException
+    val poisoned = spark.range(4).select(col("id").as("vec_id"),
+      udf((id: Long) =>
+        if (id >= 0) throw new IllegalStateException("a Spark job ran")
+        else Seq(0f)).apply(col("id")).as("embedding"))
+    val e = intercept[IllegalArgumentException](Similarity.knnGraph(poisoned,
+      "vec_id", "embedding", 5, nBands = 1, rowsPerBand = 13, dim = 8))
+    assert(e.getMessage.contains("4096"))
+  }
+
   test("knnGraph recall vs brute-force graph is reasonable on random vectors") {
     val corpus = randCorpus(120, 16)
     val approx = Similarity.knnGraph(corpus, "vec_id", "embedding", k = 5,

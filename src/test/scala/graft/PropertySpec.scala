@@ -12,13 +12,12 @@ class PropertySpec extends SparkSpec {
 
   /** Deterministic-seed sampling harness (the scalatest/scalacheck bridge
     * artifact is not in the offline cache; raw Gen sampling is equivalent
-    * for these invariants). */
+    * for these invariants). One seed per sample: consecutive `seed.next`
+    * states would replay the previous sample's draws shifted by one. */
   private def forSamples[A](gen: Gen[A], n: Int = 5)(f: A => Unit): Unit = {
-    var seed = org.scalacheck.rng.Seed(42L)
     val params = Gen.Parameters.default.withSize(30)
-    (1 to n).foreach { _ =>
-      gen.apply(params, seed).foreach(f)
-      seed = seed.next
+    (0 until n).foreach { i =>
+      gen.apply(params, org.scalacheck.rng.Seed(42L + i)).foreach(f)
     }
   }
 
