@@ -40,7 +40,12 @@ import graft.sinks.EventSink
  * [[FlightOps.routeStats]] and [[FlightOps.hourlyStats]]. A failing sink
  * stops its whole query, as one failing operator stops the reference's
  * single Flink job. Checkpoints live in `<checkpointRoot>/events` and
- * `<checkpointRoot>/stats`.
+ * `<checkpointRoot>/stats`, each with Spark's usual `metadata`, `offsets/`,
+ * `commits/` and `sources/` (and, for `stats`, `state/`). [[start]] writes
+ * them through [[LocalCheckpointFileManager]], which starts no process per
+ * checkpoint file and puts no hidden `.<name>.crc` checksum next to each,
+ * unless the session already names a manager in
+ * `spark.sql.streaming.checkpointFileManagerClass`.
  *
  * Time semantics (SURVEY §7.4): the reference windows on *processing* time
  * (`TumblingProcessingTimeWindows`, no watermarks). `TimeMode.Processing`
@@ -71,6 +76,9 @@ object FlightStreamJob {
     def queries: Seq[StreamingQuery] =
       Seq(notifications, airlineStats, routeStats, hourlyStats, rawEvents).distinct
   }
+
+  /** The session key naming Spark's streaming checkpoint file manager. */
+  val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
 
   /** The three stats branches: sink name, tumbling window and shape. */
   private val StatsBranches = Seq(
@@ -129,6 +137,12 @@ object FlightStreamJob {
    * ("notifications", "airline_stats", "route_stats", "hourly_stats",
    * "raw_events"), so tests plug Memory sinks where production plugs
    * Kafka/JDBC.
+   *
+   * Unless the session already names a checkpoint file manager, this sets
+   * [[LocalCheckpointFileManager]] on it and leaves it set: Spark creates
+   * some managers lazily on the query threads (the `stats` query's
+   * `sources/` log among them), so a value restored after `start()` would
+   * miss them.
    */
   def start(
       spark: SparkSession,
@@ -137,6 +151,8 @@ object FlightStreamJob {
       checkpointRoot: String,
       sinkFor: String => EventSink,
       compatBounds: Boolean = false): Branches = {
+    if (spark.conf.getOption(CheckpointManagerKey).isEmpty)
+      spark.conf.set(CheckpointManagerKey, classOf[LocalCheckpointFileManager].getName)
     val (parsed, timeCol) = parsedStream(spark, source, mode)
     val raw = sinkFor("raw_events")
     val notifications = sinkFor("notifications")

@@ -187,7 +187,7 @@ class CepSpec extends SparkSpec {
       col("event_type") === "c", col("event_type") === "n", 3600L)
     val q = stream.writeStream.format("memory").queryName("cep_out")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("cep-cp").toString)
+        tempDir("cep-cp").toString)
       .outputMode("append").start()
     try {
       // batch 1: the first five events, SHUFFLED — within-batch time order
@@ -237,7 +237,7 @@ class CepSpec extends SparkSpec {
       col("event_type") === "c", col("event_type") === "n", 3600L)
     val q = stream.writeStream.format("memory").queryName("cep_straggler_out")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("cepstrag-cp").toString)
+        tempDir("cepstrag-cp").toString)
       .outputMode("append").start()
     try {
       input.addData(evs.take(2).map { case (u, id, t, sec) => (u, id, t, sec) }: _*)
@@ -281,7 +281,7 @@ class CepSpec extends SparkSpec {
       3600L, maxSpans = 2)
     val q = stream.writeStream.format("memory").queryName("cepall_out")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("cepall-cp").toString)
+        tempDir("cepall-cp").toString)
       .outputMode("append").start()
     try {
       val wire = evs
@@ -333,7 +333,7 @@ class CepSpec extends SparkSpec {
       val q = stream.writeStream.format("memory")
         .queryName(s"cepall_strag_$cap")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("cepallstrag-cp").toString)
+          tempDir("cepallstrag-cp").toString)
         .outputMode("append").start()
       try {
         input.addData((1L, 2L, "a", 20L)); q.processAllAvailable()
@@ -373,7 +373,7 @@ class CepSpec extends SparkSpec {
       3600L, maxSpans = 1)
     val q = stream.writeStream.format("memory").queryName("cepall_sameus")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("cepallsame-cp").toString)
+        tempDir("cepallsame-cp").toString)
       .outputMode("append").start()
     try {
       input.addData(evs.map { case (u, id, t, sec) => (u, id, t, sec) }: _*)
@@ -421,7 +421,7 @@ class CepSpec extends SparkSpec {
       3600L, maxSpans = 4)
     val q = stream.writeStream.format("memory").queryName("cepall_overlap")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("cepallov-cp").toString)
+        tempDir("cepallov-cp").toString)
       .outputMode("append").start()
     try {
       // split so each user's anchors+negations and closes cross a batch
@@ -618,7 +618,7 @@ class CepSpec extends SparkSpec {
       "user_id", "ts", "event_id", steps, bounds, 3600L)
     val q = stream.writeStream.format("memory").queryName("cepk_out")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("cepk-cp").toString)
+        tempDir("cepk-cp").toString)
       .outputMode("append").start()
     try {
       val w = evs
@@ -661,7 +661,7 @@ class CepSpec extends SparkSpec {
       col("event_type") === "c", col("event_type") === "n", 3600L)
     val q = stream.writeStream.format("memory").queryName("cep_negstrag_out")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("cepnegstrag-cp").toString)
+        tempDir("cepnegstrag-cp").toString)
       .outputMode("append").start()
     try {
       input.addData(evs.take(2).map { case (u, id, t, sec) => (u, id, t, sec) }: _*)
@@ -698,7 +698,7 @@ class CepSpec extends SparkSpec {
       "user_id", "ts", "event_id", steps, col("event_type") === "n", 3600L)
     val q = stream.writeStream.format("memory").queryName("cepn_negstrag_out")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("cepnnegstrag-cp").toString)
+        tempDir("cepnnegstrag-cp").toString)
       .outputMode("append").start()
     try {
       input.addData(evs.take(2).map { case (u, id, t, sec) => (u, id, t, sec) }: _*)
@@ -737,7 +737,7 @@ class CepSpec extends SparkSpec {
       "user_id", "ts", "event_id", steps, col("event_type") === "n", 3600L)
     val q = stream.writeStream.format("memory").queryName("cepn_out")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("cepn-cp").toString)
+        tempDir("cepn-cp").toString)
       .outputMode("append").start()
     try {
       // batch 1 shuffled, cut mid-sequence; batch 2 carries both closes
@@ -809,7 +809,7 @@ class CepSpec extends SparkSpec {
     val q = stream(framed(input.toDF())).writeStream.format("memory")
       .queryName(name)
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory(name).toString)
+        tempDir(name).toString)
       .outputMode("append").start()
     val got = try {
       (0 until 4).foreach { j =>

@@ -137,7 +137,7 @@ class CorpusSignalsSpec extends SparkSpec {
     val trained = TextOps.bpeTrain(docs, col("text"), merges = 4)
     val inMem = trained.orderBy("iteration").collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
-    val dir = java.nio.file.Files.createTempDirectory("bpe-vocab").toString
+    val dir = tempDir("bpe-vocab").toString
     TextOps.writeBpeVocab(trained, s"$dir/vocab.parquet")
     val loaded = TextOps.readBpeVocab(spark, s"$dir/vocab.parquet")
     assert(loaded == inMem, s"rule order drifted through the artifact: $loaded vs $inMem")

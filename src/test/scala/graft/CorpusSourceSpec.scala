@@ -21,7 +21,7 @@ class CorpusSourceSpec extends SparkSpec {
     """{"doc_id": 6}""")                                           // missing_text
 
   test("readJsonl: accepts good lines, recomputes n_chars, dead-letters the rest") {
-    val dir = Files.createTempDirectory("corpus-jsonl").toString
+    val dir = tempDir("corpus-jsonl").toString
     Files.write(java.nio.file.Paths.get(s"$dir/part-0.jsonl"),
       lines.mkString("\n").getBytes("UTF-8"))
     val df = CorpusSource.readJsonl(spark, dir)
@@ -49,7 +49,7 @@ class CorpusSourceSpec extends SparkSpec {
     val q = CorpusSource.parseJsonl(input.toDF().toDF("value"))
       .select("doc_id", "is_reject", "reject_reason")
       .writeStream.format("memory").queryName("corpus_parse_out")
-      .option("checkpointLocation", Files.createTempDirectory("cjl-cp").toString)
+      .option("checkpointLocation", tempDir("cjl-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       input.addData(lines: _*)

@@ -18,7 +18,7 @@ class EdgeCorpusSpec extends SparkSpec {
   /** Schema-matched n-row copies of every table (read via the adaptive
     * loaders' raw source so types round-trip exactly). */
   private def materialize(suffix: String, n: Int): String = {
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft-edge-$suffix"
+    val out = tempDir(s"graft-edge-$suffix").toString
     tables.foreach { t =>
       spark.read.parquet(s"$src/$t.parquet").limit(n)
         .write.mode("overwrite").parquet(s"$out/$t.parquet")

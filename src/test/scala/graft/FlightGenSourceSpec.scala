@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import graft.operators.FlightOps
@@ -30,7 +29,7 @@ class FlightGenSourceSpec extends SparkSpec {
   test("five-branch topology runs end-to-end from the DSv2 source") {
     // row i is scheduled at 00:00 + 30 i s, in order, so with a zero watermark
     // delay row 600 (05:00) closes every window rows 0..599 opened
-    val cp = Files.createTempDirectory("fg-job-cp").toString
+    val cp = tempDir("fg-job-cp").toString
     val branches = graft.streaming.FlightStreamJob.start(
       spark,
       graft.sources.EventSource.FlightGen(numRows = 601, rowsPerBatch = 200),
@@ -66,7 +65,7 @@ class FlightGenSourceSpec extends SparkSpec {
       .option("numRows", 350).option("rowsPerBatch", 100).load()
     val q = FlightOps.parseFlightEvents(df)
       .writeStream.format("memory").queryName("flightgen_out")
-      .option("checkpointLocation", Files.createTempDirectory("fg-cp").toString)
+      .option("checkpointLocation", tempDir("fg-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       q.processAllAvailable()

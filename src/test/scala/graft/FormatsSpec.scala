@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** Batch source/sink format breadth: the engine reads and writes parquet
@@ -12,7 +11,7 @@ class FormatsSpec extends SparkSpec {
     .withColumn("ts", col("ts").cast("timestamp_ntz"))
 
   private def roundTrip(fmt: String): Unit = {
-    val dir = Files.createTempDirectory(s"graft-$fmt").toString + s"/events_$fmt"
+    val dir = tempDir(s"graft-$fmt").toString + s"/events_$fmt"
     events.write.format(fmt).mode("overwrite")
       .option("header", "true") // ignored by non-CSV
       .save(dir)

@@ -93,7 +93,7 @@ class IncrementalDedupSpec extends SparkSpec {
       Dedup.signatureIndex(oldDocs, col("text"), col("doc_id")), "sig_idx",
       nBuckets = 4)
     // same rows as plain (un-bucketed) parquet — the only delta is layout
-    val plainDir = java.nio.file.Files.createTempDirectory("sig_plain").toString
+    val plainDir = tempDir("sig_plain").toString
     Dedup.signatureIndex(oldDocs, col("text"), col("doc_id"))
       .write.mode("overwrite").parquet(plainDir)
 

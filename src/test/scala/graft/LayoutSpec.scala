@@ -23,7 +23,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("compactParquet rewrites a splintered directory into right-sized files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val dir = tempDir("graft_compact").toString
     (1L to 10000L).toDF("id").withColumn("payload", lpad(col("id").cast("string"), 64, "x"))
       .repartition(64).write.parquet(s"$dir/in") // 64 splinter files
     def parquetFiles(d: String) =

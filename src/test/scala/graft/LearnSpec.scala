@@ -85,7 +85,7 @@ class LearnSpec extends SparkSpec {
       input.toDF().toDF("doc_id" +: "y" +: Learn.featureCols: _*), w.toSeq)
     val q = scored.writeStream.format("memory").queryName("learn_out")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("learn-cp").toString)
+        tempDir("learn-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       input.addData(rows.take(200): _*)
@@ -103,8 +103,7 @@ class LearnSpec extends SparkSpec {
       Tables.documents(spark, "/root/testdata/sf0.001"),
       col("doc_id"), col("text"))
     val w = Learn.perceptronWeights(feats, iters = 4)
-    val path = java.nio.file.Files
-      .createTempDirectory("learn-w").toString + "/weights"
+    val path = tempDir("learn-w").toString + "/weights"
     Learn.writeWeights(spark, path, w.toSeq)
     assert(Learn.readWeights(spark, path).toSeq === w.toSeq)
     // layout mismatch must raise, not silently mis-score

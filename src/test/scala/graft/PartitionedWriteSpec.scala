@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** Partitioned parquet layout: writing with partitionBy lets every
@@ -10,7 +9,7 @@ import org.apache.spark.sql.functions._
 class PartitionedWriteSpec extends SparkSpec {
 
   test("partitionBy write + filter read prunes to the matching partition") {
-    val out = Files.createTempDirectory("graft-part").toString + "/events"
+    val out = tempDir("graft-part").toString + "/events"
     val ev = Tables.events(spark, "/root/testdata/sf0.001")
     ev.write.partitionBy("event_type").mode("overwrite").parquet(out)
 
@@ -30,7 +29,7 @@ class PartitionedWriteSpec extends SparkSpec {
     import graft.operators.Layout
     def toMap(rows: Array[(Int, Long, Long)]) =
       rows.map(r => r._1 -> (r._2, r._3)).toMap
-    val out = Files.createTempDirectory("graft-export").toString
+    val out = tempDir("graft-export").toString
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text")
     val manifest = toMap(Layout.exportShards(spark, docs, "doc_id", 4, out)

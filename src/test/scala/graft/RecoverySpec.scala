@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -21,7 +20,7 @@ class RecoverySpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[String]
-    val cp = Files.createTempDirectory("graft-recover-cp").toString
+    val cp = tempDir("graft-recover-cp").toString
     def agg = FlightOps.parseFlightEvents(input.toDF())
       .groupBy(window(col("scheduled_time"), "2 minutes"), col("airline"))
       .agg(count(lit(1)).as("n"), sum(col("is_delayed")).as("n_delayed"))
@@ -67,7 +66,7 @@ class RecoverySpec extends SparkSpec {
     // delete-then-append must converge to exactly one copy from every
     // intermediate state the crash can leave behind.
     import spark.implicits._
-    val db = Files.createTempDirectory("graft-derby-crash").toString + "/db"
+    val db = tempDir("graft-derby-crash").toString + "/db"
     val url = s"jdbc:derby:$db;create=true"
     val sink = graft.sinks.EventSink.JdbcIdempotent(url, "flights_crash")
     val props = new java.util.Properties()

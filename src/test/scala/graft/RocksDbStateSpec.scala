@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -19,7 +17,7 @@ import graft.streaming.StatefulOps
  * pins the cluster configuration on the two custom-state shapes with the
  * richest state types (nested lists of case classes, maps).
  */
-class RocksDbStateSpec extends org.scalatest.funsuite.AnyFunSuite {
+class RocksDbStateSpec extends SparkSpec {
 
   // a CHILD session of the shared test context: the provider class is a
   // session-scoped SQL conf, so newSession() isolates it — and, critically,
@@ -48,7 +46,7 @@ class RocksDbStateSpec extends org.scalatest.funsuite.AnyFunSuite {
       val out = StatefulOps.softDedupStream(
         input.toDF().toDF("doc_id", "text"), "doc_id", "text")
       val q = out.writeStream.format("memory").queryName("rocks_soft")
-        .option("checkpointLocation", Files.createTempDirectory("rsoft-cp").toString)
+        .option("checkpointLocation", tempDir("rsoft-cp").toString)
         .outputMode(OutputMode.Append).start()
       try {
         // three batches: the bucket state (members with sigs + size map +
@@ -91,7 +89,7 @@ class RocksDbStateSpec extends org.scalatest.funsuite.AnyFunSuite {
       // the memory sink does not support recovery)
       def run(kill: Boolean): Seq[(String, Long, Long, Long, Long, Long)] = {
         val input = MemoryStream[(Long, String)]
-        val cp = Files.createTempDirectory("rsoftkill-cp").toString
+        val cp = tempDir("rsoftkill-cp").toString
         val emitted = scala.collection.mutable.ArrayBuffer[W]()
         def start() = StatefulOps.softDedupStream(
             input.toDF().toDF("doc_id", "text"), "doc_id", "text")
@@ -143,7 +141,7 @@ class RocksDbStateSpec extends org.scalatest.funsuite.AnyFunSuite {
       import spark.implicits._
       type S = graft.streaming.StatefulOps.UserSession
       val input = MemoryStream[(String, String)]
-      val cp = Files.createTempDirectory("rsesskill-cp").toString
+      val cp = tempDir("rsesskill-cp").toString
       val emitted = scala.collection.mutable.ArrayBuffer[S]()
       def start() = StatefulOps.sessionizeStream(
           input.toDF().toDF("user_id", "ts_s")
@@ -188,7 +186,7 @@ class RocksDbStateSpec extends org.scalatest.funsuite.AnyFunSuite {
           .withColumn("ts", col("ts_s").cast("timestamp")),
         "user_id", "ts", watermark = "10 seconds", gapMs = 60000L)
       val q = sessions.writeStream.format("memory").queryName("rocks_sess")
-        .option("checkpointLocation", Files.createTempDirectory("rsess-cp").toString)
+        .option("checkpointLocation", tempDir("rsess-cp").toString)
         .outputMode(OutputMode.Append).start()
       try {
         input.addData(("u1", "2024-01-01 10:00:00"), ("u1", "2024-01-01 10:00:30"))
@@ -218,7 +216,7 @@ class RocksDbStateSpec extends org.scalatest.funsuite.AnyFunSuite {
         Seq(col("event_type") === "a", col("event_type") === "c"),
         col("event_type") === "n", 3600L, maxSpans = 4)
       val q = out.writeStream.format("memory").queryName("rocks_cepall")
-        .option("checkpointLocation", Files.createTempDirectory("rcepall-cp").toString)
+        .option("checkpointLocation", tempDir("rcepall-cp").toString)
         .outputMode(OutputMode.Append).start()
       try {
         // the anchor ARRAY state (Array[Long] pairs) must deserialize from
@@ -264,7 +262,7 @@ class RocksDbStateSpec extends org.scalatest.funsuite.AnyFunSuite {
         prof, "key", "ts", "tie", "value", quantScale = 1L, tauScaled = 1L,
         seed = Some(Seq((1L, 2L)).toDF("k", "h0")))
       val q = out.writeStream.format("memory").queryName("rocks_fcseed")
-        .option("checkpointLocation", Files.createTempDirectory("rfcseed-cp").toString)
+        .option("checkpointLocation", tempDir("rfcseed-cp").toString)
         .outputMode(OutputMode.Append).start()
       try {
         // batch 1 initializes from the seed (h=3); batch 2 must resume

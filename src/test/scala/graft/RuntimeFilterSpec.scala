@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /**
  * Runtime bloom-filter injection — the 100 TB scan-pruning lever: a selective
@@ -14,7 +13,7 @@ class RuntimeFilterSpec extends SparkSpec {
   import spark.implicits._
 
   test("selective dim join injects a bloom filter into the fact side") {
-    val dir = Files.createTempDirectory("graft_rtf").toString
+    val dir = tempDir("graft_rtf").toString
     Seq.tabulate(20000)(i => (i.toLong, i % 500, s"payload_$i"))
       .toDF("id", "k", "payload").write.parquet(s"$dir/fact")
     Seq.tabulate(500)(i => (i, s"dim_$i")).toDF("k", "name")

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.operators.{Layout, Scd}
 
@@ -55,7 +54,7 @@ class ScdMergeSpec extends SparkSpec {
   }
 
   test("mergeIntoParquet: versioned table converges and retains history") {
-    val dir = Files.createTempDirectory("merge-tbl").toString
+    val dir = tempDir("merge-tbl").toString
     val v1 = Layout.mergeIntoParquet(spark, dir,
       Seq((1L, "a"), (2L, "b")).toDF("k", "name"), Seq("k"))
     assert(v1 == 1)

@@ -1,6 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for all suites (forked test JVM): the
@@ -23,6 +25,20 @@ object TestSession {
   }
 }
 
-abstract class SparkSpec extends AnyFunSuite {
+abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSession.spark
+
+  private var tempRoot: Option[Path] = None
+
+  /** A fresh directory under this suite's own root in `java.io.tmpdir`;
+    * the root and everything under it is deleted after the suite. */
+  def tempDir(prefix: String): Path = synchronized {
+    val root = tempRoot.getOrElse(Files.createTempDirectory(s"graft-spec-${getClass.getSimpleName}-"))
+    tempRoot = Some(root)
+    Files.createTempDirectory(root, prefix)
+  }
+
+  override def afterAll(): Unit =
+    try super.afterAll()
+    finally tempRoot.foreach(r => new scala.reflect.io.Directory(r.toFile).deleteRecursively())
 }

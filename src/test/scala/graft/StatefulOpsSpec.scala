@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -25,7 +24,7 @@ class StatefulOpsSpec extends SparkSpec {
       FlightOps.parseFlightEvents(input.toDF()),
       "scheduled_time", "1 hour", Seq("flight_id"))
     val q = deduped.writeStream.format("memory").queryName("dedup_out")
-      .option("checkpointLocation", Files.createTempDirectory("dedup-cp").toString)
+      .option("checkpointLocation", tempDir("dedup-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       input.addData(ev("F1", "AA", "2024-01-01T10:00:00", 20))
@@ -46,7 +45,7 @@ class StatefulOpsSpec extends SparkSpec {
     val totals = StatefulOps.runningAirlineTotals(
       StatefulOps.typed(FlightOps.parseFlightEvents(input.toDF())))
     val q = totals.writeStream.format("memory").queryName("totals_out")
-      .option("checkpointLocation", Files.createTempDirectory("totals-cp").toString)
+      .option("checkpointLocation", tempDir("totals-cp").toString)
       .outputMode(OutputMode.Update).start()
     try {
       input.addData(ev("F1", "AA", "2024-01-01T10:00:00", 20))
@@ -76,7 +75,7 @@ class StatefulOpsSpec extends SparkSpec {
       input.toDF().toDF("user", "ts"), "user", "ts",
       watermark = "0 seconds", gapMs = 10 * 60 * 1000L)
     val q = sessions.writeStream.format("memory").queryName("sess_out")
-      .option("checkpointLocation", Files.createTempDirectory("sess-cp").toString)
+      .option("checkpointLocation", tempDir("sess-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       // one session for A (two events 5 min apart), one for B
@@ -112,7 +111,7 @@ class StatefulOpsSpec extends SparkSpec {
       input.toDF().toDF("user", "ts"), "user", "ts",
       watermark = "0 seconds", gapMs = 10 * 60 * 1000L)
     val q = sessions.writeStream.format("memory").queryName("sess_split_out")
-      .option("checkpointLocation", Files.createTempDirectory("sess2-cp").toString)
+      .option("checkpointLocation", tempDir("sess2-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       // 10:00 and 10:40 arrive in ONE batch: with a 0s watermark delay the
@@ -138,7 +137,7 @@ class StatefulOpsSpec extends SparkSpec {
       input.toDF().toDF("user", "ts"), "user", "ts",
       watermark = "1 hour", gapMs = 10 * 60 * 1000L)
     val q = sessions.writeStream.format("memory").queryName("sess_late_out")
-      .option("checkpointLocation", Files.createTempDirectory("sess4-cp").toString)
+      .option("checkpointLocation", tempDir("sess4-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       input.addData(("A", ts("2024-01-01 10:10:00")))
@@ -175,7 +174,7 @@ class StatefulOpsSpec extends SparkSpec {
       input.toDF().toDF("user", "ts"), "user", "ts",
       watermark = "1 hour", gapMs = 10 * 60 * 1000L)
     val q = sessions.writeStream.format("memory").queryName("sess_straggle_out")
-      .option("checkpointLocation", Files.createTempDirectory("sess5-cp").toString)
+      .option("checkpointLocation", tempDir("sess5-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       input.addData(("A", ts("2024-01-01 10:30:00")))
@@ -223,7 +222,7 @@ class StatefulOpsSpec extends SparkSpec {
       input.toDF().toDF("user", "ts"), "user", "ts",
       watermark = "1 hour", gapMs = 10 * 60 * 1000L)
     val q = sessions.writeStream.format("memory").queryName("sess_frag_out")
-      .option("checkpointLocation", Files.createTempDirectory("sess6-cp").toString)
+      .option("checkpointLocation", tempDir("sess6-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       input.addData(("A", ts("2024-01-01 10:00:00")), ("A", ts("2024-01-01 10:40:00")))
@@ -266,7 +265,7 @@ class StatefulOpsSpec extends SparkSpec {
       input.toDF().toDF("user", "ts"), "user", "ts",
       watermark = "0 seconds", gapMs = 10 * 60 * 1000L)
     val q = sessions.writeStream.format("memory").queryName("sess_parity_out")
-      .option("checkpointLocation", Files.createTempDirectory("sess3-cp").toString)
+      .option("checkpointLocation", tempDir("sess3-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       input.addData(rows: _*)
@@ -298,7 +297,7 @@ class StatefulOpsSpec extends SparkSpec {
       // as late (late-drop behavior is the engine's, not under test here)
       watermark = "2 hours")
     val q = joined.writeStream.format("memory").queryName("ivj_out")
-      .option("checkpointLocation", Files.createTempDirectory("ivj-cp").toString)
+      .option("checkpointLocation", tempDir("ivj-cp").toString)
       .outputMode(OutputMode.Append).start()
     // points: p1 inside both overlapping A-intervals; p2 exactly at an end
     // (excluded); p3 exactly at a start (included); p4 wrong user
@@ -346,7 +345,7 @@ class StatefulOpsSpec extends SparkSpec {
       "t", "start", "end", keys = Seq("user"), maxSpanSec = 600L,
       watermark = "0 seconds", joinType = "left_outer")
     val q = joined.writeStream.format("memory").queryName("ivj_lo_out")
-      .option("checkpointLocation", Files.createTempDirectory("ivjlo-cp").toString)
+      .option("checkpointLocation", tempDir("ivjlo-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       // p1 covered by an interval; p2 outside every interval
@@ -381,7 +380,7 @@ class StatefulOpsSpec extends SparkSpec {
       "t", "start", "end", keys = Seq("user"), maxSpanSec = 60L,
       watermark = "0 seconds")
     val q = joined.writeStream.format("memory").queryName("ivj_bad_out")
-      .option("checkpointLocation", Files.createTempDirectory("ivjb-cp").toString)
+      .option("checkpointLocation", tempDir("ivjb-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       pIn.addData(("A", ts("2024-01-01 10:00:30"), 1L))

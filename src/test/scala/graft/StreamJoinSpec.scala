@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.operators.FlightOps
@@ -26,7 +25,7 @@ class StreamJoinSpec extends SparkSpec {
     val enriched = FlightOps.parseFlightEvents(input.toDF())
       .join(broadcast(dim), Seq("airline"), "left")
     val q = enriched.writeStream.format("memory").queryName("enriched_out")
-      .option("checkpointLocation", Files.createTempDirectory("sj-cp").toString)
+      .option("checkpointLocation", tempDir("sj-cp").toString)
       .start()
     try {
       input.addData(
@@ -55,7 +54,7 @@ class StreamJoinSpec extends SparkSpec {
       FlightOps.delayNotificationFields(FlightOps.parseFlightEvents(input.toDF())),
       broadcast(users))
     val q = routed.writeStream.format("memory").queryName("notify_out")
-      .option("checkpointLocation", Files.createTempDirectory("nr-cp").toString)
+      .option("checkpointLocation", tempDir("nr-cp").toString)
       .start()
     try {
       input.addData(
@@ -93,7 +92,7 @@ class StreamJoinSpec extends SparkSpec {
         col("a_time") > col("d_time") &&
         col("a_time") <= col("d_time") + expr("INTERVAL 2 HOURS"))
     val q = joined.writeStream.format("memory").queryName("ssj_out")
-      .option("checkpointLocation", Files.createTempDirectory("ssj-cp").toString)
+      .option("checkpointLocation", tempDir("ssj-cp").toString)
       .start()
     try {
       left.addData(ev("D1", "AA", "2024-01-01T10:00:00", "2024-01-01T11:00:00", true))
@@ -134,7 +133,7 @@ class StreamJoinSpec extends SparkSpec {
       input.toDF().toDF("vec_id", "embedding"), emb, buckets,
       "vec_id", "embedding", nPlanes = 8, nProbes = 4)
     val q = out.writeStream.format("memory").queryName("ann_stream_out")
-      .option("checkpointLocation", Files.createTempDirectory("annst-cp").toString)
+      .option("checkpointLocation", tempDir("annst-cp").toString)
       .outputMode("append").start()
     try {
       val (b1, b2) = queries.splitAt(3)

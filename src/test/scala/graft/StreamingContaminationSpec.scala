@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -36,7 +35,7 @@ class StreamingContaminationSpec extends SparkSpec {
     val gated = TextOps.contamination(input.toDF().toDF("doc_id", "text"),
       train, col("text"), col("doc_id"), n = 3, threshold = 0.9)
     val q = gated.writeStream.format("memory").queryName("contam_out")
-      .option("checkpointLocation", Files.createTempDirectory("contam-cp").toString)
+      .option("checkpointLocation", tempDir("contam-cp").toString)
       .outputMode(OutputMode.Update).start()
     try {
       input.addData(incoming.take(2): _*)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -43,7 +42,7 @@ class StreamingCorpusSpec extends SparkSpec {
         .dropDuplicatesWithinWatermark("doc_id"))
 
     val q = streamed.writeStream.format("memory").queryName("corpus_out")
-      .option("checkpointLocation", Files.createTempDirectory("corpus-cp").toString)
+      .option("checkpointLocation", tempDir("corpus-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       input.addData(
@@ -98,7 +97,7 @@ class StreamingCorpusSpec extends SparkSpec {
       .select(col("doc_id"), col("n_shingles"), col("n_boiler"), col("boiler_ratio"))
 
     val q = streamed.writeStream.format("memory").queryName("boiler_stream_out")
-      .option("checkpointLocation", Files.createTempDirectory("boiler-cp").toString)
+      .option("checkpointLocation", tempDir("boiler-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       input.addData(rows.take(4).map { case (id, t) => (id, t, "2024-01-01 10:00:00") }: _*)
@@ -141,7 +140,7 @@ class StreamingCorpusSpec extends SparkSpec {
       .select(col("doc_id"), col("n_bigrams"), col("lm_score"))
 
     val q = streamed.writeStream.format("memory").queryName("lm_stream_out")
-      .option("checkpointLocation", Files.createTempDirectory("lm-cp").toString)
+      .option("checkpointLocation", tempDir("lm-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       input.addData(rows.take(2).map { case (id, t) => (id, t, "2024-01-01 10:00:00") }: _*)
@@ -187,7 +186,7 @@ class StreamingCorpusSpec extends SparkSpec {
       .select(col("doc_id"), col("n_grams"), col("weight_scaled"), col("mean_weight"))
 
     val q = streamed.writeStream.format("memory").queryName("dsir_stream_out")
-      .option("checkpointLocation", Files.createTempDirectory("dsir-cp").toString)
+      .option("checkpointLocation", tempDir("dsir-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       input.addData(rows.take(2).map { case (id, t) => (id, t, "2024-01-01 10:00:00") }: _*)
@@ -250,7 +249,7 @@ class StreamingCorpusSpec extends SparkSpec {
         col("mean_weight"))
 
     val q = streamed.writeStream.format("memory").queryName("composed_out")
-      .option("checkpointLocation", Files.createTempDirectory("composed-cp").toString)
+      .option("checkpointLocation", tempDir("composed-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       input.addData((1L, good1, "2024-01-01 10:00:00"),
@@ -302,7 +301,7 @@ class StreamingCorpusSpec extends SparkSpec {
       input.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
       centArr, tau = 0.95)
     val q = verdicts.writeStream.format("memory").queryName("semdedup_out")
-      .option("checkpointLocation", Files.createTempDirectory("sem-cp").toString)
+      .option("checkpointLocation", tempDir("sem-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       // the near-copies arrive in LATER micro-batches than their originals —
@@ -351,7 +350,7 @@ class StreamingCorpusSpec extends SparkSpec {
     val enc = Similarity.pqEncodeStatic(
       input.toDF().toDF("vec_id", "embedding"), codebook, "vec_id", "embedding", 4)
     val q = enc.writeStream.format("memory").queryName("pq_codes_out")
-      .option("checkpointLocation", Files.createTempDirectory("pq-cp").toString)
+      .option("checkpointLocation", tempDir("pq-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       input.addData(rows.take(32): _*)
@@ -373,7 +372,7 @@ class StreamingCorpusSpec extends SparkSpec {
     val (m, ksub, iters, nCells) = (2, 4, 2, 4)
     val (coarse, pqc, _) = Similarity.ivfPqIndexBuild(
       emb, "vec_id", "embedding", m, ksub, iters, nCells)
-    val dir = Files.createTempDirectory("pq-artifacts").toString
+    val dir = tempDir("pq-artifacts").toString
     Similarity.writeCodebook(pqc, s"$dir/codebook.parquet")
     Similarity.writeCoarse(coarse, s"$dir/coarse.parquet")
     val cbMem = Similarity.collectCodebook(pqc).sortBy(c => (c._1, c._2)).toSeq
@@ -430,7 +429,7 @@ class StreamingCorpusSpec extends SparkSpec {
       input.toDF().toDF("vec_id", "embedding"), packed, coarseArr,
       codebook, "vec_id", "embedding", m, nProbe)
     val q = served.writeStream.format("memory").queryName("ivfpq_out")
-      .option("checkpointLocation", Files.createTempDirectory("ivfpq-cp").toString)
+      .option("checkpointLocation", tempDir("ivfpq-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       input.addData(qRows.take(1): _*)
@@ -461,7 +460,7 @@ class StreamingCorpusSpec extends SparkSpec {
     val scored = Similarity.int8ScoreStatic(
       input.toDF().toDF("vec_id", "embedding"), queries, "vec_id", "embedding", amax)
     val q = scored.writeStream.format("memory").queryName("sq8_out")
-      .option("checkpointLocation", Files.createTempDirectory("sq8-cp").toString)
+      .option("checkpointLocation", tempDir("sq8-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       input.addData(rows.take(17): _*)
@@ -487,7 +486,7 @@ class StreamingCorpusSpec extends SparkSpec {
       input.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
       Array((0, Seq(1.0, 0.0))), tau = 0.95)
     val q = verdicts.writeStream.format("memory").queryName("semchain_out")
-      .option("checkpointLocation", Files.createTempDirectory("semc-cp").toString)
+      .option("checkpointLocation", tempDir("semc-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       input.addData((1L, a)); q.processAllAvailable()
@@ -511,7 +510,7 @@ class StreamingCorpusSpec extends SparkSpec {
     val hits = StatefulOps.nearDupStream(
       input.toDF().toDF("doc_id", "text"), "doc_id", "text")
     val q = hits.writeStream.format("memory").queryName("neardup_out")
-      .option("checkpointLocation", Files.createTempDirectory("nd-cp").toString)
+      .option("checkpointLocation", tempDir("nd-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       input.addData((1L, base + " bank"),
@@ -541,7 +540,7 @@ class StreamingCorpusSpec extends SparkSpec {
     val hits = StatefulOps.nearDupStream(
       input.toDF().toDF("doc_id", "text"), "doc_id", "text", maxPerBucket = 1)
     val q = hits.writeStream.format("memory").queryName("ndcap_out")
-      .option("checkpointLocation", Files.createTempDirectory("ndc-cp").toString)
+      .option("checkpointLocation", tempDir("ndc-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       input.addData((1L, base)); q.processAllAvailable()
@@ -564,7 +563,7 @@ class StreamingCorpusSpec extends SparkSpec {
       .withWatermark("ts", "10 minutes")
       .dropDuplicatesWithinWatermark("fingerprint")
     val q = deduped.writeStream.format("memory").queryName("fp_out")
-      .option("checkpointLocation", Files.createTempDirectory("fp-cp").toString)
+      .option("checkpointLocation", tempDir("fp-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       input.addData(
@@ -600,7 +599,7 @@ class StreamingCorpusSpec extends SparkSpec {
       .filter(col("gate_value").between(col("v_lo"), col("v_hi")))
       .select("doc_id")
     val q = streamed.writeStream.format("memory").queryName("len_gate_out")
-      .option("checkpointLocation", Files.createTempDirectory("len-cp").toString)
+      .option("checkpointLocation", tempDir("len-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       input.addData(rows.take(10): _*)
@@ -626,7 +625,7 @@ class StreamingCorpusSpec extends SparkSpec {
       .withWatermark("ts", "10 minutes")
       .dropDuplicatesWithinWatermark("url_norm")
     val q = deduped.writeStream.format("memory").queryName("url_out")
-      .option("checkpointLocation", Files.createTempDirectory("url-cp").toString)
+      .option("checkpointLocation", tempDir("url-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       input.addData(
@@ -671,7 +670,7 @@ class StreamingCorpusSpec extends SparkSpec {
       input.toDF().toDF("source", "doc_id", "n_tokens"),
       "source", "doc_id", "n_tokens", budget)
     val q = streamed.writeStream.format("memory").queryName("budget_out")
-      .option("checkpointLocation", Files.createTempDirectory("budget-cp").toString)
+      .option("checkpointLocation", tempDir("budget-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       input.addData(batch1: _*)
@@ -694,7 +693,7 @@ class StreamingCorpusSpec extends SparkSpec {
       input.toDF().toDF("source", "doc_id", "n_tokens"),
       "source", "doc_id", "n_tokens", budget = 300L, skipOver = true)
     val q = streamed.writeStream.format("memory").queryName("budget_skip_out")
-      .option("checkpointLocation", Files.createTempDirectory("budget-skip-cp").toString)
+      .option("checkpointLocation", tempDir("budget-skip-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       // one doc per micro-batch: arrival order is the admission order
@@ -721,7 +720,7 @@ class StreamingCorpusSpec extends SparkSpec {
     val streamed = graft.operators.Sketches.kmvDistinct(
       input.toDF().toDF("grp", "v"), col("grp"), col("v"), k = 16)
     val q = streamed.writeStream.format("memory").queryName("kmv_out")
-      .option("checkpointLocation", Files.createTempDirectory("kmv-cp").toString)
+      .option("checkpointLocation", tempDir("kmv-cp").toString)
       .outputMode(OutputMode.Complete).start()
     try {
       val batch1 = (1 to 30).map(i => ("a", s"v$i")) ++ (1 to 5).map(i => ("b", s"w$i"))
@@ -747,7 +746,7 @@ class StreamingCorpusSpec extends SparkSpec {
     val streamed = graft.operators.Sketches.countMinSketch(
       input.toDF().toDF("k"), col("k"), depth = 4, width = 32)
     val q = streamed.writeStream.format("memory").queryName("cms_out")
-      .option("checkpointLocation", Files.createTempDirectory("cms-cp").toString)
+      .option("checkpointLocation", tempDir("cms-cp").toString)
       .outputMode(OutputMode.Complete).start()
     try {
       val batch1 = Seq.fill(40)("hot") ++ (1 to 10).map(i => s"r$i")
@@ -773,7 +772,7 @@ class StreamingCorpusSpec extends SparkSpec {
     val streamed = graft.operators.Sketches.hllRegisters(
       input.toDF().toDF("grp", "v"), col("grp"), col("v"))
     val q = streamed.writeStream.format("memory").queryName("hll_out")
-      .option("checkpointLocation", Files.createTempDirectory("hll-cp").toString)
+      .option("checkpointLocation", tempDir("hll-cp").toString)
       .outputMode(OutputMode.Complete).start()
     try {
       val batch1 = (1 to 400).map(i => ("a", s"u$i")) ++ (1 to 50).map(i => ("b", s"x$i"))
@@ -811,7 +810,7 @@ class StreamingCorpusSpec extends SparkSpec {
       input.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
       nBands = 4, rowsPerBand = 2, dim = 64)
     val q = served.writeStream.format("memory").queryName("knn_out")
-      .option("checkpointLocation", Files.createTempDirectory("knn-cp").toString)
+      .option("checkpointLocation", tempDir("knn-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       input.addData(rows.take(23): _*); q.processAllAvailable()
@@ -860,7 +859,7 @@ class StreamingCorpusSpec extends SparkSpec {
       input.toDF().toDF("id", "name", "blk"), index,
       col("id"), col("name"), col("blk"), pieces)
     val q = served.writeStream.format("memory").queryName("entity_out")
-      .option("checkpointLocation", Files.createTempDirectory("ent-cp").toString)
+      .option("checkpointLocation", tempDir("ent-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       // two micro-batches; at-least-once per slot, so distinct downstream
@@ -892,7 +891,7 @@ class StreamingCorpusSpec extends SparkSpec {
     val input = MemoryStream[(Long, Long, Int, Double)]
     val q = score(input.toDF().toDF("user_id", "event_id", "hr", "value"))
       .writeStream.format("memory").queryName("seasonal_out")
-      .option("checkpointLocation", Files.createTempDirectory("sea-cp").toString)
+      .option("checkpointLocation", tempDir("sea-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       input.addData(rows.take(rows.size / 2): _*); q.processAllAvailable()

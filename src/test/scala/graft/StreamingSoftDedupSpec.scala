@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -35,7 +33,7 @@ class StreamingSoftDedupSpec extends SparkSpec {
     val out = StatefulOps.softDedupStream(
       input.toDF().toDF("doc_id", "text"), "doc_id", "text")
     val q = out.writeStream.format("memory").queryName("soft_out")
-      .option("checkpointLocation", Files.createTempDirectory("soft-cp").toString)
+      .option("checkpointLocation", tempDir("soft-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       input.addData((1L, base + " bank")); q.processAllAvailable()
@@ -76,7 +74,7 @@ class StreamingSoftDedupSpec extends SparkSpec {
       input.toDF().toDF("doc_id", "text"), "doc_id", "text",
       minEstJaccard = 0.5, maxPerBucket = 1024)
     val q = out.writeStream.format("memory").queryName("softpar_out")
-      .option("checkpointLocation", Files.createTempDirectory("softp-cp").toString)
+      .option("checkpointLocation", tempDir("softp-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       input.addData(docs: _*); q.processAllAvailable()
@@ -129,7 +127,7 @@ class StreamingSoftDedupSpec extends SparkSpec {
     val out = StatefulOps.softDedupStream(
       input.toDF().toDF("doc_id", "text"), "doc_id", "text", maxPerBucket = 1)
     val q = out.writeStream.format("memory").queryName("softcap_out")
-      .option("checkpointLocation", Files.createTempDirectory("softc-cp").toString)
+      .option("checkpointLocation", tempDir("softc-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       input.addData((1L, base)); q.processAllAvailable()
@@ -157,7 +155,7 @@ class StreamingSoftDedupSpec extends SparkSpec {
     val out = StatefulOps.softDedupStream(
       input.toDF().toDF("doc_id", "text"), "doc_id", "text", maxPerBucket = 1)
     val q = out.writeStream.format("memory").queryName("softredel_out")
-      .option("checkpointLocation", Files.createTempDirectory("softr-cp").toString)
+      .option("checkpointLocation", tempDir("softr-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       input.addData((1L, base)); q.processAllAvailable()
@@ -181,7 +179,7 @@ class StreamingSoftDedupSpec extends SparkSpec {
       input.toDF().toDF("doc_id", "text"), "doc_id", "text",
       minEstJaccard = 1.01, maxPerBucket = 1)
     val q = out.writeStream.format("memory").queryName("softsing_out")
-      .option("checkpointLocation", Files.createTempDirectory("softs-cp").toString)
+      .option("checkpointLocation", tempDir("softs-cp").toString)
       .outputMode(OutputMode.Append).start()
     try {
       input.addData((1L, base)); q.processAllAvailable()

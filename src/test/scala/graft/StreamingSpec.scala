@@ -25,7 +25,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[String]
-    val cp = Files.createTempDirectory("graft-stream-cp").toString
+    val cp = tempDir("graft-stream-cp").toString
 
     val branches = FlightStreamJob.start(
       spark,
@@ -75,7 +75,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[String]
-    val cp = Files.createTempDirectory("graft-proc-cp").toString
+    val cp = tempDir("graft-proc-cp").toString
     val branches = FlightStreamJob.start(spark, EventSource.Existing(input.toDF()),
       TimeMode.Processing, cp, EventSink.Memory(_))
     try {
@@ -93,7 +93,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[String]
-    val cp = Files.createTempDirectory("graft-compat-cp").toString
+    val cp = tempDir("graft-compat-cp").toString
     val branches = FlightStreamJob.start(spark, EventSource.Existing(input.toDF()),
       TimeMode.Event("scheduled_time"), cp, EventSink.Memory(_),
       compatBounds = true)
@@ -117,7 +117,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[String]
-    val cp = Files.createTempDirectory("graft-half-cp").toString
+    val cp = tempDir("graft-half-cp").toString
     // a plain file where the stats checkpoint directory must go
     Files.createFile(java.nio.file.Paths.get(cp, "stats"))
     intercept[Exception](FlightStreamJob.start(spark, EventSource.Existing(input.toDF()),
@@ -129,8 +129,8 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[String]
-    val cp = Files.createTempDirectory("graft-jdbc-cp").toString
-    val db = Files.createTempDirectory("graft-derby").toString + "/db"
+    val cp = tempDir("graft-jdbc-cp").toString
+    val db = tempDir("graft-derby").toString + "/db"
     val url = s"jdbc:derby:$db;create=true"
 
     val parsed = graft.operators.FlightOps.parseFlightEvents(input.toDF())
@@ -150,8 +150,8 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[String]
-    val cp = Files.createTempDirectory("graft-jdbc-idem-cp").toString
-    val db = Files.createTempDirectory("graft-derby-idem").toString + "/db"
+    val cp = tempDir("graft-jdbc-idem-cp").toString
+    val db = tempDir("graft-derby-idem").toString + "/db"
     val url = s"jdbc:derby:$db;create=true"
 
     val sink = EventSink.JdbcIdempotent(url, "flights_idem")
@@ -178,7 +178,7 @@ class StreamingSpec extends SparkSpec {
       // the same holds for the Parquet and Memory sinks
       val other = graft.operators.FlightOps.parseFlightEvents(
         Seq(ev("4", "DD", "2024-01-01T13:00:10", "2024-01-01T13:05:10", false)).toDF("value"))
-      val dir = Files.createTempDirectory("graft-parquet-idem").toString
+      val dir = tempDir("graft-parquet-idem").toString
       val parquet = EventSink.Parquet(dir)
       val memory = EventSink.Memory("memory_idem")
       Seq(parquet, memory).foreach { sink =>
@@ -245,7 +245,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[String]
-    val cp = Files.createTempDirectory("graft-exact-cp").toString
+    val cp = tempDir("graft-exact-cp").toString
     val sinks = Map("airline_stats" -> "ex_airline", "route_stats" -> "ex_route",
       "hourly_stats" -> "ex_hourly", "notifications" -> "ex_notes", "raw_events" -> "ex_raw")
     val branches = FlightStreamJob.start(spark, EventSource.Existing(input.toDF()),
@@ -268,9 +268,9 @@ class StreamingSpec extends SparkSpec {
   test("restart from the checkpoint root replays into JdbcIdempotent: one row per window") {
     // a file directory, not a MemoryStream: a MemoryStream drops the data
     // of a batch once either query commits it, so it cannot replay for both
-    val in = Files.createTempDirectory("graft-restart-in")
-    val cp = Files.createTempDirectory("graft-restart-cp").toString
-    val db = Files.createTempDirectory("graft-derby-restart").toString + "/db"
+    val in = tempDir("graft-restart-in")
+    val cp = tempDir("graft-restart-cp").toString
+    val db = tempDir("graft-derby-restart").toString + "/db"
     val url = s"jdbc:derby:$db;create=true"
     def startJob() = FlightStreamJob.start(spark, EventSource.FileDir(in.toString, 1),
       TimeMode.Event("scheduled_time", "1 minute"), cp,
@@ -292,8 +292,9 @@ class StreamingSpec extends SparkSpec {
     Seq("events", "stats").foreach { q =>
       val dir = new java.io.File(s"$cp/$q/commits")
       val last = dir.list().filter(_.forall(_.isDigit)).map(_.toLong).max
-      // the checksum goes too, or the re-commit's rename finds it in the way
-      Seq(s"$last", s".$last.crc").foreach(f => assert(new java.io.File(dir, f).delete(), f))
+      // the job's checkpoint manager writes no checksum that could stay behind
+      assert(new java.io.File(dir, s"$last").delete(), s"$last")
+      assert(!new java.io.File(dir, s".$last.crc").exists(), s".$last.crc")
     }
     val second = startJob()
     try {

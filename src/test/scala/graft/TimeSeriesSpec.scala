@@ -223,7 +223,7 @@ class TimeSeriesSpec extends SparkSpec {
       slackScaled = 10L, hScaled = 20L)
     val q = stream.writeStream.format("memory").queryName("cusum_out")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("cusum-cp").toString)
+        tempDir("cusum-cp").toString)
       .outputMode("append").start()
     try {
       val (b1, b2) = rows.splitAt(5)
@@ -353,7 +353,7 @@ class TimeSeriesSpec extends SparkSpec {
       prof, "key", "ts", "tie", "value", quantScale = 10L, tauScaled = 5L)
     val q = stream.writeStream.format("memory").queryName("fc_out")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("fc-cp").toString)
+        tempDir("fc-cp").toString)
       .outputMode("append").start()
     try {
       // arrival order encodes h: feed in (id) order with ts = id
@@ -404,7 +404,7 @@ class TimeSeriesSpec extends SparkSpec {
       seed = Some(seed))
     val q = stream.writeStream.format("memory").queryName("fc_seed_out")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("fcseed-cp").toString)
+        tempDir("fcseed-cp").toString)
       .outputMode("append").start()
     try {
       val rows = tail.map { case (k, id, _, v) => (k, id, id, v) }
@@ -456,7 +456,7 @@ class TimeSeriesSpec extends SparkSpec {
       slackScaled = 10L, hScaled = 20L)
     val q = stream.writeStream.format("memory").queryName("peak_out")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("peak-cp").toString)
+        tempDir("peak-cp").toString)
       .outputMode("append").start()
     try {
       val (b1, b2) = rows.splitAt(5)
