@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.jdbc.{JdbcDialect, JdbcDialects}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.streaming.FlightStreamJob
 
 /**
  * Sink abstraction. The reference writes to ClickHouse over JDBC with batch
@@ -21,14 +22,18 @@ sealed trait EventSink {
   /** Write one micro-batch; `epochId` is its streaming batch id. */
   def write(batch: DataFrame, epochId: Long): Unit
 
-  /** Attach this sink alone to a streaming frame and start the query. */
-  def start(df: DataFrame, checkpoint: String, queryName: String): StreamingQuery =
+  /** Attach this sink alone to a streaming frame and start the query, on a
+    * session prepared as [[graft.streaming.FlightStreamJob.start]] prepares
+    * its own. */
+  def start(df: DataFrame, checkpoint: String, queryName: String): StreamingQuery = {
+    FlightStreamJob.prepareSession(df.sparkSession)
     df.writeStream
       .queryName(queryName)
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime("0 seconds"))
       .foreachBatch(write _)
       .start()
+  }
 }
 
 object EventSink {

@@ -32,7 +32,11 @@ import graft.sinks.EventSink
  *
  * Per-trigger work (source listing, planning, codegen, checkpoint commits)
  * is paid twice per trigger instead of five times, and the three windowed
- * branches share one shuffle and one state store. The exploded window column
+ * branches share one shuffle and one state store. Codegen is mostly paid
+ * once per JVM: [[start]] turns off Spark's per-session artifact isolation,
+ * so both queries run their tasks in the executor's one default class
+ * loader and share Janino's compile cache (keyed on class loader and code)
+ * with the JVM's other queries and jobs that run without isolation. The exploded window column
  * carries the event-time column's watermark metadata, as Spark's `window()`
  * does, so a window is emitted, and a late row dropped, by the same
  * `window.end <= watermark` rule as a per-branch query: every stats sink gets
@@ -79,6 +83,35 @@ object FlightStreamJob {
 
   /** The session key naming Spark's streaming checkpoint file manager. */
   val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** The session key that gives each session, and so each streaming query
+    * (which runs on a clone of its session), its own executor class loader. */
+  val ArtifactIsolationKey = "spark.sql.artifact.isolation.enabled"
+
+  /**
+   * Prepare `spark` for streaming queries: unless the caller set them, set
+   * [[CheckpointManagerKey]] to [[LocalCheckpointFileManager]] and
+   * [[ArtifactIsolationKey]] to `false`, and leave them set. Both are read
+   * lazily on the query's side (Spark creates some checkpoint managers,
+   * the `stats` query's `sources/` log among them, on the query threads;
+   * each query's cloned session reads the isolation key when it first runs
+   * a job), so a value restored after `start()` would miss them. "Set"
+   * means set on the session: `getAll` lists only those keys, where
+   * `getOption` also returns Spark's defaults.
+   *
+   * With isolation on (Spark's default), every query gets its own task
+   * class loader, and `CodeGenerator`'s cache, keyed on (class loader,
+   * code), compiles and JITs all of a query's classes again. graft adds no
+   * session artifact (jar, file or class), so the isolation protects
+   * nothing here.
+   */
+  private[graft] def prepareSession(spark: SparkSession): Unit = {
+    val set = spark.conf.getAll
+    Seq(CheckpointManagerKey -> classOf[LocalCheckpointFileManager].getName,
+      ArtifactIsolationKey -> "false").foreach { case (k, v) =>
+      if (!set.contains(k)) spark.conf.set(k, v)
+    }
+  }
 
   /** The three stats branches: sink name, tumbling window and shape. */
   private val StatsBranches = Seq(
@@ -138,11 +171,11 @@ object FlightStreamJob {
    * "raw_events"), so tests plug Memory sinks where production plugs
    * Kafka/JDBC.
    *
-   * Unless the session already names a checkpoint file manager, this sets
-   * [[LocalCheckpointFileManager]] on it and leaves it set: Spark creates
-   * some managers lazily on the query threads (the `stats` query's
-   * `sources/` log among them), so a value restored after `start()` would
-   * miss them.
+   * Before either query starts, [[prepareSession]] sets on the session,
+   * unless the caller set them, [[LocalCheckpointFileManager]] as the
+   * checkpoint file manager, so checkpoints are written without a process
+   * per file, and artifact isolation off, so both queries' generated
+   * classes are compiled once per JVM instead of once per query.
    */
   def start(
       spark: SparkSession,
@@ -151,8 +184,7 @@ object FlightStreamJob {
       checkpointRoot: String,
       sinkFor: String => EventSink,
       compatBounds: Boolean = false): Branches = {
-    if (spark.conf.getOption(CheckpointManagerKey).isEmpty)
-      spark.conf.set(CheckpointManagerKey, classOf[LocalCheckpointFileManager].getName)
+    prepareSession(spark)
     val (parsed, timeCol) = parsedStream(spark, source, mode)
     val raw = sinkFor("raw_events")
     val notifications = sinkFor("notifications")

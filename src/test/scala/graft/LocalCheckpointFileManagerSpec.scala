@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCh
 import org.apache.spark.sql.functions._
 import graft.operators.FlightOps
 import graft.sinks.EventSink
-import graft.sources.{EventSource, FlightGen}
+import graft.sources.EventSource
 import graft.streaming.{FlightStreamJob, LocalCheckpointFileManager}
 
 /** The job's local checkpoint manager: its publish protocol on single
@@ -68,30 +68,8 @@ class LocalCheckpointFileManagerSpec extends SparkSpec {
     assert(names(dir) == Set("3"))
   }
 
-  /** Run `f` with the session's manager key set to `cls`, or unset for
-    * None, then put the key back as it was. */
-  private def withManagerKey[A](cls: Option[String])(f: => A): A = {
-    val before = spark.conf.getOption(key)
-    cls.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-    try f finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
-  // 40 in-order events 30 s apart, then a sentinel days later that closes
-  // every earlier window; one file, so one micro-batch, each
-  private val batches = Seq(0 until 20, 20 until 40, Seq(10000)).map(_.map(i => FlightGen.eventJson(i.toLong)))
+  private val batches = JobFeed.batches
   private val sentinel = java.sql.Timestamp.valueOf("2024-01-04 11:20:00")
-
-  /** Feeds `batches` to the job as files of `in`, one file per batch. */
-  private final class Feed(in: NioPath) {
-    private var files = 0
-    def apply(job: FlightStreamJob.Branches, bs: Seq[Seq[String]]): Unit = bs.foreach { b =>
-      val tmp = Files.createTempFile(in.getParent, "batch", ".json")
-      Files.write(tmp, b.mkString("", "\n", "\n").getBytes("UTF-8"))
-      Files.move(tmp, in.resolve(f"b$files%02d.json"))
-      files += 1
-      job.queries.foreach(_.processAllAvailable())
-    }
-  }
 
   private def start(in: NioPath, cp: String, sinkFor: String => EventSink) =
     FlightStreamJob.start(spark, EventSource.FileDir(in.toString, 1),
@@ -115,8 +93,8 @@ class LocalCheckpointFileManagerSpec extends SparkSpec {
     val in = tempDir(s"lcfm-$tag-in")
     val cp = tempDir(s"lcfm-$tag-cp").toString
     val url = s"jdbc:derby:${tempDir(s"lcfm-$tag-derby")}/db;create=true"
-    val feed = new Feed(in)
-    def run(cls: Option[String], bs: Seq[Seq[String]]) = withManagerKey(cls) {
+    val feed = new JobFeed(in)
+    def run(cls: Option[String], bs: Seq[Seq[String]]) = withConf(key, cls) {
       val job = start(in, cp, b => EventSink.JdbcIdempotent(url, s"${tag}_$b"))
       try { job.queries.foreach(_.processAllAvailable()); feed(job, bs) }
       finally job.queries.foreach(_.stop())
@@ -159,11 +137,11 @@ class LocalCheckpointFileManagerSpec extends SparkSpec {
 
   /** Drains `batches` through the job under the session's key `cls`; returns
     * the checkpoint root and the key's value after the job stopped. */
-  private def drain(cls: Option[String], tag: String): (String, Option[String]) = withManagerKey(cls) {
+  private def drain(cls: Option[String], tag: String): (String, Option[String]) = withConf(key, cls) {
     val in = tempDir(s"lcfm-$tag-in")
     val cp = tempDir(s"lcfm-$tag-cp").toString
     val job = start(in, cp, b => EventSink.Memory(s"${tag}_$b"))
-    try new Feed(in)(job, batches) finally job.queries.foreach(_.stop())
+    try new JobFeed(in)(job, batches) finally job.queries.foreach(_.stop())
     (cp, spark.conf.getOption(key))
   }
 

@@ -38,6 +38,15 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     Files.createTempDirectory(root, prefix)
   }
 
+  /** Run `f` with the session's `key` set to `value`, or unset for None,
+    * then put the key back as the session had it. `getAll` lists only keys
+    * set on the session, where `getOption` also returns Spark's defaults. */
+  def withConf[A](key: String, value: Option[String])(f: => A): A = {
+    val before = spark.conf.getAll.get(key)
+    value.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    try f finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   override def afterAll(): Unit =
     try super.afterAll()
     finally tempRoot.foreach(r => new scala.reflect.io.Directory(r.toFile).deleteRecursively())
