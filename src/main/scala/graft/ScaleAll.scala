@@ -6,14 +6,14 @@ import org.apache.spark.sql.functions._
 /**
  * Materializes a k× (default 10× = "sf1") dataset under `/tmp/graft-sf1`
  * from the sf0.1 parquet, for the WHOLE-CATALOG scale bench recorded in
- * BASELINE.md — the per-operator ScaleStress story promoted to every table.
+ * BASELINE.md.
  *
  * Construction discipline (each copy is a self-consistent shard):
  *  - every key column is offset by `copy × span(owning table)`, with the
  *    SAME offset applied to every foreign-key reference — joins stay
  *    exactly as selective as the base data, row counts scale linearly;
- *  - document text is rewritten injectively per copy (`tok` → `tok_cN`,
- *    the [[ScaleStress.scaledCorpus]] rule): shingles/bigrams are
+ *  - document text is rewritten injectively per copy (every
+ *    whitespace-separated token `tok` → `tok_cN`): shingles/bigrams are
  *    copy-local, so dedup/LSH/run-detection pair spaces scale linearly
  *    instead of quadratically colliding across copies; `n_chars` is
  *    recomputed from the rewritten text;

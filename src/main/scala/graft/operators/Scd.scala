@@ -29,7 +29,6 @@ object Scd {
    */
   def runHistory(events: DataFrame, keyCol: Column, stateCol: Column,
       timeCol: Column, tieCol: Column): DataFrame = {
-    val byTime = Window.partitionBy(keyCol).orderBy(timeCol, tieCol)
     val flagged = events.select(keyCol.as("k"), stateCol.as("state"),
         timeCol.as("t"), tieCol.as("tie"))
       .withColumn("chg",

@@ -19,8 +19,8 @@ object Skew {
   /** Inner equi-join `large ⋈ small` on `key`, with the large side salted by
     * `saltCol` (any column that varies within a key, e.g. a row id).
     *
-    * WHEN TO USE (r13 SkewStress three-form measurement, tabled in
-    * BASELINE.md §skew-join): if the small side fits the broadcast
+    * WHEN TO USE (the three-form measurement in BASELINE.md, "r13:
+    * skew-join three forms"): if the small side fits the broadcast
     * threshold, broadcast — neither AQE splitting nor salting is needed.
     * When both sides must shuffle, prefer AQE's `OptimizeSkewedJoin` IF its
     * statistics can see the skew — but above

@@ -199,7 +199,7 @@ object TextOps {
    *    one hot window partition, so this form is ONLY for frames where the
    *    hottest shingle's row count provably fits one task (measured ~2×
    *    faster on a uniform sf0.1 corpus; loses at hot-30% skew — see
-   *    `SkewStress` in BASELINE.md).
+   *    BASELINE.md, "Hot-key skew stress (r8, re-run r9 …)").
    */
   def boilerplateStats(docs: DataFrame, textCol: Column, idCol: Column,
       n: Int = 3, minDf: Int = 5, skewSafe: Boolean = true,
@@ -363,8 +363,8 @@ object TextOps {
    *    (bigram, w1, doc). A hyper-common first word ("the …") makes one hot
    *    window partition, so this form is ONLY for frames where the hottest
    *    word's row count provably fits one task (measured faster on a
-   *    uniform sf0.1 corpus; 6.9× max-task fan-in growth at hot-30% skew —
-   *    see `SkewStress` in BASELINE.md).
+   *    uniform sf0.1 corpus; 1.8× max-task fan-in growth at hot-30% skew —
+   *    see BASELINE.md, "Hot-key skew stress (r8, re-run r9 …)").
    *
    * Self-scoring on the training corpus by construction; to score a foreign
    * frame against this corpus's model, materialize the model table
